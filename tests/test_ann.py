@@ -743,7 +743,7 @@ def test_rebalance_reaches_occupancy_bound(spark, emb):
         clustered, "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
     )
     idx = IVFIndex.build(emb, num_cells=16, seed=42).assign_new(new)
-    bal = idx.rebalance(factor=2.0, seed=42, max_rounds=6)
+    bal = idx.rebalance(factor=2.0, seed=42)
 
     occ = [r["n_vectors"] for r in bal.cell_stats().collect()]
     assert sum(occ) == 800
@@ -946,7 +946,7 @@ def test_ivf_merge_then_rebalance_chain(spark, emb):
     )
     a = IVFIndex.build(emb, num_cells=16, seed=42)
     b = IVFIndex.build(shard_b, num_cells=4, seed=7)
-    merged = a.merge(b).rebalance(factor=2.0, seed=42, max_rounds=6)
+    merged = a.merge(b).rebalance(factor=2.0, seed=42)
     occ = [r["n_vectors"] for r in merged.cell_stats().collect()]
     assert sum(occ) == emb.count() + 200
     assert max(occ) <= 2.0 * (sum(occ) / len(occ))
@@ -1657,3 +1657,63 @@ def test_hier_search_filtered_prefilter_semantics(spark, emb):
         nprobe=eng.index.num_cells,
     ).collect()
     assert [r["vec_id"] for r in via_engine] == want
+
+
+def test_benchmark_instrumentation_contract():
+    """servebench's traced run wraps methods through
+    ``owner.__dict__[attr]``, so the wrapped methods must stay defined
+    in these class bodies (an inherited or base-class definition would
+    raise KeyError there). The two-level index inherits the whole
+    search/maintenance surface instead of redefining it."""
+    from vector_database_in_rust_spark import VectorEngine
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
+
+    assert {"build", "save", "load", "search", "assign_new"} <= set(
+        IVFIndex.__dict__
+    )
+    assert {"__init__", "count", "build_index", "search_exact"} <= set(
+        VectorEngine.__dict__
+    )
+    inherited = {
+        "search", "search_filtered", "search_batch_pruned", "merge",
+        "cell_stats", "occupancy_stats", "rebalance", "nprobe_for_frac",
+        "nprobe_for_rows_frac", "geom_col", "_corpus_rows",
+    }
+    assert not inherited & set(HierarchicalIVF.__dict__)
+
+
+def test_hier_probe_cells_equal_dense_argsort(spark, emb):
+    """At the default ``nprobe_l1`` (all super-cells) and any
+    ``nprobe <= num_cells``, the two-level probe ranking equals a stable
+    argsort over the dense composite ``centroids`` — overflow cells
+    included, phantom slots never ranked. IVF-PQ over a hierarchical
+    index probes that dense matrix as a flat quantizer, so this
+    equality is what makes both indexes probe the same cells."""
+    import numpy as np
+
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
+
+    point, new = _drift_cluster_df(spark)
+    idx = (
+        HierarchicalIVF.build(emb, k1=3, k2=4, seed=42)
+        .assign_new(new.select("vec_id", "embedding"))
+        .split_hot_cells(factor=2.0, seed=42)
+    )
+    assert idx.overflow
+    # num_cells counts real cells only, never phantom slots
+    assert idx.num_cells == sum(
+        len(v) for v in idx.l2_centroids.values()
+    ) + len(idx.overflow)
+    queries = [point] + [
+        np.asarray(r["embedding"], dtype=np.float64)
+        for r in emb.filter("vec_id < 5").collect()
+    ]
+    for q in queries:
+        d = ((idx.centroids - q) ** 2).sum(axis=1)
+        order = [int(c) for c in np.argsort(d, kind="stable")]
+        for nprobe in (1, 3, idx.num_cells // 2, idx.num_cells):
+            assert idx._probe_cells(q, nprobe) == order[:nprobe]
+    full = idx._probe_cells(point, idx.num_cells)
+    assert len(set(full)) == idx.num_cells
+    phantom = HierarchicalIVF._PHANTOM_CENTROID
+    assert all((idx.centroids[c] < phantom).all() for c in full)

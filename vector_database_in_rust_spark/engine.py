@@ -74,7 +74,7 @@ class VectorEngine:
             self.df = read_raw_f32(spark, source, dimensions)
         else:
             self.df = spark.read.parquet(source)
-        self.index: IVFIndex | HierarchicalIVF | None = None
+        self.index: IVFIndex | None = None  # flat or HierarchicalIVF
         self._packed: DataFrame | None = None
 
     # -- store ops --------------------------------------------------------

@@ -1138,7 +1138,7 @@ SELECT query_id, vec_id, dist FROM ranked WHERE r <= {KNN_K}
 @register("ann_serve_batch", _ANN_SERVE_ORACLE)
 def ann_serve_batch(spark, sf_dir):
     """SERVING-TIER batch probe (round 16, r15 verdict item 5): the
-    first {_SERVE_QUERIES} stored vectors as one query batch, full
+    first 1024 stored vectors as one query batch, full
     probe (nprobe = all cells) over the shared IVF index, impl='auto'.
     Full probe makes IVF exact, so the lane hash-checks against plain
     exact-knn SQL while the ROUTE follows the measured volume
@@ -1149,7 +1149,7 @@ def ann_serve_batch(spark, sf_dir):
     bench guard covered it); at the driver's sf0.01 correctness scale
     (500 queries x 500 rows) the same router picks expr, hash-checked
     against the same oracle. known_queries: the draw is vec_id <
-    {_SERVE_QUERIES}, bounded by the memoized corpus count — no
+    1024, bounded by the memoized corpus count — no
     routing job."""
     idx = _ivf_index(spark, sf_dir)
     n_q = min(_SERVE_QUERIES, _emb_count(spark, sf_dir))
@@ -1412,7 +1412,7 @@ def _rebalanced_index(spark, sf_dir):
         clustered, "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
     )
     idx = IVFIndex.build(_emb(spark, sf_dir), num_cells=16, seed=42).assign_new(new)
-    reb = idx.rebalance(factor=_REBAL_FACTOR, seed=42, max_rounds=6)
+    reb = idx.rebalance(factor=_REBAL_FACTOR, seed=42)
     reb.assignments = reb.assignments.persist()
     out = (reb, [float(x) for x in point], new)
     _REBAL_CACHE[sf_dir] = out

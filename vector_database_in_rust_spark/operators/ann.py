@@ -36,15 +36,18 @@ Scale notes (100 TB, ~1e11 vectors):
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_database_in_rust_spark.functions.vectors import l2_squared
 from vector_database_in_rust_spark.operators.knn import (
     bounded_query_collect,
     knn_exact,
+    top_k_per_query,
 )
 
 DEFAULT_SEED = 42
@@ -115,6 +118,63 @@ def _project_udf(proj: np.ndarray):
     return project
 
 
+def _stack(s: pd.Series) -> np.ndarray:
+    """An Arrow batch's array column as one float64 matrix."""
+    return np.vstack(s.apply(np.asarray, args=(np.float64,)))
+
+
+def _blas_topk(
+    qids, qmat: np.ndarray, x: np.ndarray, ids: np.ndarray, k: int,
+    round_digits: int | None,
+) -> tuple[list, list, list]:
+    """Score one (query block x cell) pair with one BLAS call and keep
+    each query's top-k — the per-cell step shared by both BLAS serving
+    paths (``_pruned_blas_topk``, ``_cogroup_blas_topk``).
+
+    ||q-x||^2 = ||q||^2 + ||x||^2 - 2 q.x, clamped at 0 (a true squared
+    distance is >= 0, and an un-clamped -0.0 would hash-differ from
+    0.0) and rounded HALF_UP — ``F.round``'s rule on a non-negative
+    value (np.round is half-even and can differ on exact boundaries).
+    Rows are ordered by (rounded dist, vec_id), the global ranking
+    window's exact key, so the map-side cut provably contains the
+    global top-k. Results are row-identical to the expression form
+    except when a distance lands within one BLAS-expansion ulp of a
+    rounding boundary (the expanded form and the elementwise sum can
+    differ in the last float place there). Returns the (query_id,
+    vec_id, dist) columns as lists; ``_topk_frame`` frames them."""
+    d = (
+        (qmat * qmat).sum(axis=1)[:, None]
+        + (x * x).sum(axis=1)[None, :]
+        - 2.0 * (qmat @ x.T)
+    )
+    d = np.maximum(d, 0.0)
+    if round_digits is not None:
+        s = 10.0 ** round_digits
+        d = np.floor(d * s + 0.5) / s
+    kk = min(k, d.shape[1])
+    out_q, out_v, out_d = [], [], []
+    for qi in range(d.shape[0]):
+        order = np.lexsort((ids, d[qi]))[:kk]
+        out_q.extend([qids[qi]] * kk)
+        out_v.extend(ids[order])
+        out_d.extend(d[qi][order])
+    return out_q, out_v, out_d
+
+
+def _topk_frame(out_q: list, out_v: list, out_d: list) -> pd.DataFrame:
+    """(query_id, vec_id, dist) rows as a pandas UDF result. Id columns
+    are object dtype: Arrow coerces them to the declared schema types,
+    so int/string/etc ids pass through unchanged (an int64-forced
+    Series crashed string ids)."""
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype=object),
+            "vec_id": pd.Series(out_v, dtype=object),
+            "dist": pd.Series(out_d, dtype="float64"),
+        }
+    )
+
+
 def _pruned_blas_topk(
     assignments: DataFrame,
     data: list,
@@ -134,20 +194,10 @@ def _pruned_blas_topk(
     (broadcast join + zip_with/aggregate L2) spending 24-48 s on
     ~1.2M candidate-pair x 384-element interpreted array ops while the
     pruned scan itself was seconds; the identical work is one
-    ``Q @ X.T`` per (Arrow batch, cell) here. Per (cell, query) only
-    the top-k rows are emitted — ordered by (ROUNDED dist, vec_id),
-    the global window's exact key, so the map-side cut provably
-    contains the global top-k — and the ranking window then sees
-    ``cells x queries x k`` rows instead of every candidate pair.
-
-    Rounding matches ``search_batch``'s ``F.round`` RULE (HALF_UP on a
-    non-negative squared distance; the expanded form's tiny negative
-    float error is clamped to 0 first — a true squared distance is
-    >= 0, and an un-clamped -0.0 would hash-differ from 0.0). Results
-    are row-identical to the expression form except when a distance
-    lands within one BLAS-expansion ulp of a rounding boundary — the
-    expanded ||q||^2+||x||^2-2q.x and the elementwise sum can differ
-    in the last float place there (round-12 advisor note).
+    ``Q @ X.T`` per (Arrow batch, cell) here (``_blas_topk``). Per
+    (cell, query) only the top-k rows are emitted, so the ranking
+    window sees ``cells x queries x k`` rows instead of every
+    candidate pair.
 
     Id columns pass through with their source types: ``vec_id`` takes
     ``assignments[id_col]``'s type, ``query_id`` the caller-declared
@@ -172,46 +222,18 @@ def _pruned_blas_topk(
     def block(batches):
         probes = bc.value
         for pdf in batches:
-            out_q, out_v, out_d = [], [], []
+            out = ([], [], [])
             for cell, sub in pdf.groupby("cell_id"):
                 pq = probes.get(int(cell))
                 if pq is None:
                     continue
-                qids, qmat = pq
-                x = np.vstack(
-                    sub[vec_col].apply(np.asarray, args=(np.float64,))
+                rows = _blas_topk(
+                    *pq, _stack(sub[vec_col]), sub[id_col].to_numpy(), k,
+                    round_digits,
                 )
-                ids = sub[id_col].to_numpy()
-                # ||q-x||^2 = ||q||^2 + ||x||^2 - 2 q.x — one BLAS call
-                d = (
-                    (qmat * qmat).sum(axis=1)[:, None]
-                    + (x * x).sum(axis=1)[None, :]
-                    - 2.0 * (qmat @ x.T)
-                )
-                d = np.maximum(d, 0.0)
-                if round_digits is not None:
-                    # HALF_UP on non-negative values == F.round's rule
-                    # (np.round is half-even and can differ on exact
-                    # boundary values).
-                    s = 10.0 ** round_digits
-                    d = np.floor(d * s + 0.5) / s
-                kk = min(k, d.shape[1])
-                for qi in range(d.shape[0]):
-                    # top-k under the window's exact (dist, vec_id) key
-                    order = np.lexsort((ids, d[qi]))[:kk]
-                    out_q.extend([qids[qi]] * kk)
-                    out_v.extend(ids[order])
-                    out_d.extend(d[qi][order])
-            # object dtype: Arrow coerces to the declared schema types,
-            # so int/string/etc ids all pass through unchanged (an
-            # int64-forced Series crashed string ids).
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype=object),
-                    "vec_id": pd.Series(out_v, dtype=object),
-                    "dist": pd.Series(out_d, dtype="float64"),
-                }
-            )
+                for acc, part in zip(out, rows):
+                    acc.extend(part)
+            yield _topk_frame(*out)
 
     cand = assignments.filter(F.col("cell_id").isin(all_cells)).select(
         "cell_id", F.col(id_col), F.col(vec_col)
@@ -219,50 +241,7 @@ def _pruned_blas_topk(
     scored = cand.mapInPandas(
         block, f"query_id {query_id_type}, vec_id {id_type}, dist DOUBLE"
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
-
-
-def _occupancy_stats(assignments: DataFrame) -> dict:
-    """One-pass cell-occupancy summary over an assignment table —
-    shared by ``IVFIndex.occupancy_stats`` (see its docstring for the
-    measured degeneracy it catches and the remedies),
-    ``HierarchicalIVF.occupancy_stats``, and the streaming-maintenance
-    monitor."""
-    row = (
-        assignments.groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("cells"),
-            F.sum("n").alias("rows"),
-            F.max("n").alias("max"),
-            F.expr("percentile_approx(n, 0.5)").alias("p50"),
-            F.expr("percentile_approx(n, 0.99)").alias("p99"),
-        )
-        .collect()[0]
-    )
-    if int(row["cells"] or 0) == 0:
-        # Empty assignments: every aggregate above is NULL — report
-        # the (obviously unhealthy) empty index instead of letting
-        # the health check itself raise TypeError (r10 advisor).
-        return {
-            "cells": 0, "rows": 0, "max": 0, "p50": 0, "p99": 0,
-            "max_share": 0.0,
-        }
-    total = int(row["rows"] or 0)
-    return {
-        "cells": int(row["cells"]),
-        "rows": total,
-        "max": int(row["max"]),
-        "p50": int(row["p50"]),
-        "p99": int(row["p99"]),
-        "max_share": (int(row["max"]) / total) if total else 0.0,
-    }
+    return top_k_per_query(scored, k)
 
 
 def _fit_hot_subcentroids(
@@ -272,15 +251,14 @@ def _fit_hot_subcentroids(
     seed: int,
     max_cell_fit_rows: int,
 ) -> dict:
-    """Per-hot-cell seeded local 2-means, one ``applyInPandas`` group
-    per cell (the HierarchicalIVF level-2 discipline) — shared by the
-    flat AND hierarchical ``split_hot_cells`` so both classes split
-    under the identical rule. Returns {(cell_id, sub): centroid}."""
+    """Per-hot-cell seeded local 2-means for ``split_hot_cells``, one
+    ``applyInPandas`` group per cell (the HierarchicalIVF level-2
+    discipline). Returns {(cell_id, sub): centroid}."""
     import pandas as pd
 
     def fit2(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["cell_id"].iloc[0])
-        x = np.vstack(pdf[geom_col].apply(np.asarray, dtype=np.float64))
+        x = _stack(pdf[geom_col])
         if len(x) > max_cell_fit_rows:
             rng = np.random.RandomState(seed * 131 + c)
             x = x[rng.choice(len(x), size=max_cell_fit_rows, replace=False)]
@@ -313,8 +291,7 @@ def _reassign_hot_rows(
 ) -> DataFrame:
     """Re-score each hot cell's rows against its two sub-centroids:
     the closer-to-sub0 half keeps the cell id, the rest moves to the
-    cell's fresh id (ties keep the old id). Shared by both classes'
-    ``split_hot_cells``."""
+    cell's fresh id (ties keep the old id)."""
     spark = hot_rows.sparkSession
     remap = spark.createDataFrame(
         [
@@ -355,14 +332,12 @@ def _cogroup_blas_topk(
     — the remaining expression-form hot path after r12's
     ``_pruned_blas_topk`` fixed the broadcast-small serve): cogroup the
     probed (query, cell) pairs with the assignments ON cell_id and run
-    one ``Q_c @ X_c.T`` per cell, emitting only each (query, cell)'s
-    top-k under the global window's exact (rounded dist, vec_id) key —
-    the same map-side-cut containment argument as ``_pruned_blas_topk``
-    (and the same HALF_UP rounding + >= 0 clamp), so the downstream
-    window sees cells x queries x k rows instead of every candidate
-    pair. Cost shape: one shuffle of the probed pairs + one of the
-    candidates, both keyed by cell_id — queries never collect to the
-    driver, so this is the path for query batches too large to
+    one ``Q_c @ X_c.T`` per cell (``_blas_topk``, the same map-side
+    top-k cut, rounding and clamp as the pruned path), so the
+    downstream window sees cells x queries x k rows instead of every
+    candidate pair. Cost shape: one shuffle of the probed pairs + one
+    of the candidates, both keyed by cell_id — queries never collect
+    to the driver, so this is the path for query batches too large to
     broadcast. Group size per cell is (queries probing the cell) x
     (cell occupancy); the occupancy maintenance discipline
     (split/rebalance/rebuild_due) bounds the candidate side exactly as
@@ -372,32 +347,15 @@ def _cogroup_blas_topk(
     def block(key, probes, cands):
         if probes.empty or cands.empty:
             return pd.DataFrame({"query_id": [], "vec_id": [], "dist": []})
-        qmat = np.vstack(probes[query_vec_col].apply(np.asarray, args=(np.float64,)))
-        qids = probes[query_id_col].to_numpy()
-        x = np.vstack(cands[vec_col].apply(np.asarray, args=(np.float64,)))
-        ids = cands[id_col].to_numpy()
-        d = (
-            (qmat * qmat).sum(axis=1)[:, None]
-            + (x * x).sum(axis=1)[None, :]
-            - 2.0 * (qmat @ x.T)
-        )
-        d = np.maximum(d, 0.0)
-        if round_digits is not None:
-            s = 10.0 ** round_digits
-            d = np.floor(d * s + 0.5) / s
-        kk = min(k, d.shape[1])
-        out_q, out_v, out_d = [], [], []
-        for qi in range(d.shape[0]):
-            order = np.lexsort((ids, d[qi]))[:kk]
-            out_q.extend([qids[qi]] * kk)
-            out_v.extend(ids[order])
-            out_d.extend(d[qi][order])
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype=object),
-                "vec_id": pd.Series(out_v, dtype=object),
-                "dist": pd.Series(out_d, dtype="float64"),
-            }
+        return _topk_frame(
+            *_blas_topk(
+                probes[query_id_col].to_numpy(),
+                _stack(probes[query_vec_col]),
+                _stack(cands[vec_col]),
+                cands[id_col].to_numpy(),
+                k,
+                round_digits,
+            )
         )
 
     # Probe selectivity must reach the candidate side BEFORE the
@@ -418,13 +376,7 @@ def _cogroup_blas_topk(
             block, f"query_id {query_id_type}, vec_id {id_type}, dist DOUBLE"
         )
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return top_k_per_query(scored, k)
 
 
 def _cogroup_adc_topk(
@@ -462,7 +414,7 @@ def _cogroup_adc_topk(
             return pd.DataFrame({"query_id": [], "vec_id": [], "adc": []})
         cents, books = bc.value
         cell = int(key[0])
-        q = np.vstack(probes[query_geom_col].apply(np.asarray, args=(np.float64,)))
+        q = _stack(probes[query_geom_col])
         qids = probes[query_id_col].to_numpy()
         r = q - cents[cell][None, :]
         # (nq, m, ksub) residual tables, built batch-vectorized
@@ -526,8 +478,8 @@ def _l2_rowwise_udf(vec_col_a: str, vec_col_b: str):
 
     @pandas_udf("double")
     def dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        xa = np.vstack(a.apply(np.asarray, args=(np.float64,)))
-        xb = np.vstack(b.apply(np.asarray, args=(np.float64,)))
+        xa = _stack(a)
+        xb = _stack(b)
         return pd.Series(((xa - xb) ** 2).sum(axis=1))
 
     return dist(F.col(vec_col_a), F.col(vec_col_b))
@@ -535,9 +487,9 @@ def _l2_rowwise_udf(vec_col_a: str, vec_col_b: str):
 
 def _hier_assign_fn(bc, id_col: str, vec_col: str):
     """The two-level assignment pass as a mapInPandas closure factory —
-    shared by ``HierarchicalIVF.build`` (full-corpus assignment) and
-    ``HierarchicalIVF.assign_new`` (incremental ingest), so the ingest
-    rule is BY CONSTRUCTION the build's rule: argmin against the l1
+    ``HierarchicalIVF._assign`` runs it for both the build's
+    full-corpus assignment and ``assign_new``'s incremental ingest, so
+    the ingest rule is BY CONSTRUCTION the build's rule: argmin against the l1
     blocks, then against the winning super-cell's l2 block
     (2·sqrt(K) distance rows per vector). ``bc`` broadcasts
     (l1_centroids, l2_centroids, k2_stride, proj, overflow_by_parent);
@@ -548,7 +500,7 @@ def _hier_assign_fn(bc, id_col: str, vec_col: str):
     def assign(it):
         l1c, l2c, k2_, pj, ovf = bc.value
         for pdf in it:
-            xfull = np.vstack(pdf[vec_col].apply(np.asarray, dtype=np.float64))
+            xfull = _stack(pdf[vec_col])
             x = xfull @ pj if pj is not None else xfull
             d1 = ((x[:, None, :] - l1c[None, :, :]) ** 2).sum(axis=2)
             a1 = d1.argmin(axis=1)
@@ -810,12 +762,77 @@ def rebuild_due(
     return share > min(0.5, max_share_factor / cells)
 
 
+def _matrix_rows(mat: np.ndarray) -> list[tuple[int, list[float]]]:
+    """``(row index, row)`` pairs — the driver-side shape every small
+    centroid/projection table takes on its way into a DataFrame."""
+    return [(int(i), [float(x) for x in row]) for i, row in enumerate(mat)]
+
+
+def _write_table(spark: SparkSession, rows: list, schema: str, path: str) -> None:
+    """Overwrite ``path`` with one small single-file parquet table."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _read_matrix(spark: SparkSession, path: str, key: str, col: str) -> np.ndarray:
+    """The inverse of ``_write_table(_matrix_rows(...))``: rows ordered
+    by ``key``, stacked into one matrix."""
+    rows = spark.read.parquet(path).orderBy(key).collect()
+    return np.vstack([np.asarray(r[col]) for r in rows])
+
+
+def _fit_frame(
+    corpus: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    coarse_dim: int | None,
+    max_fit_rows: int,
+    seed: int,
+):
+    """The build-time geometry shared by both IVF builds: the corpus
+    count, the (id, vector[, projected geometry], ``_features``) frame,
+    its bounded fit sample, the optional PCA projection and the name
+    of the geometry column. KMeans quality needs representative data,
+    not all of it — fitting on at most ``max_fit_rows`` keeps the
+    iterative fit O(sample) at 100 TB, while assignment still touches
+    every row exactly once."""
+    from pyspark.ml.functions import array_to_vector
+
+    n = corpus.count()
+    base = corpus.select(F.col(id_col), F.col(vec_col))
+    frac = max_fit_rows / n if n > max_fit_rows else None
+    proj = None
+    if coarse_dim is not None:
+        sample = base if frac is None else base.sample(fraction=frac, seed=seed)
+        proj = _pca_projection(sample, vec_col=vec_col, coarse_dim=coarse_dim)
+        base = base.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
+    geom = GEOM_COL if proj is not None else vec_col
+    feat = base.withColumn(
+        "_features", array_to_vector(F.col(geom).cast("array<double>"))
+    )
+    fit_df = feat if frac is None else feat.sample(fraction=frac, seed=seed)
+    return n, feat, fit_df, proj, geom
+
+
 class IVFIndex:
     """IVF coarse-quantization index over an embedding DataFrame.
 
     The "index" is plain data: a centroid matrix (driver-side numpy, tiny)
     plus a cell-assignment DataFrame — both persistable as Parquet, which
     the reference cannot do at all (its graph dies with the process).
+
+    This class owns the inverted lists: search, filtered and batch
+    search, ingest, merge, occupancy maintenance and the assignments
+    half of persistence. What decides cells — the coarse quantizer —
+    is a small set of hooks (``_probe_cells``, ``_probed_frame``,
+    ``_assign``, ``_split``, ``_default_nprobe``, ``_save_quantizer`` /
+    ``_load_quantizer``) that :class:`HierarchicalIVF` overrides, the
+    Faiss ``IndexIVF`` split between inverted lists and a pluggable
+    quantizer. Keyword options a quantizer's ranking takes (the
+    two-level index's ``nprobe_l1``) pass through every search method
+    as ``**probe``; the flat quantizer takes none.
     """
 
     def __init__(
@@ -848,6 +865,16 @@ class IVFIndex:
     @property
     def num_cells(self) -> int:
         return int(self.centroids.shape[0])
+
+    def _default_nprobe(self) -> int:
+        """Probe budget when neither ``nprobe`` nor ``target_frac`` is
+        given."""
+        return 8
+
+    def _nprobe(self, nprobe: int | None, target_frac: float | None) -> int:
+        return _resolve_nprobe(
+            nprobe, target_frac, self.num_cells, default=self._default_nprobe()
+        )
 
     def nprobe_for_frac(self, target_frac: float) -> int:
         """nprobe probing ~``target_frac`` of this index's cells —
@@ -889,6 +916,12 @@ class IVFIndex:
         self._rows_cache = (self.assignments, n)
         return n
 
+    def _carry(self) -> list[str]:
+        """The assignment columns besides ``cell_id``."""
+        return [self.id_col, self.vec_col] + (
+            [GEOM_COL] if self.proj is not None else []
+        )
+
     # -- build (replaces build_index, src/lib.rs:336-341) -----------------
 
     @classmethod
@@ -919,29 +952,20 @@ class IVFIndex:
         cell boundaries (recall/cost routing, never correctness of the
         returned distances) come from the reduced space."""
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
-        n = corpus.count()
-        k = num_cells or _num_cells_default(n)
-        base = corpus.select(F.col(id_col), F.col(vec_col))
-        # Fit on a bounded sample: KMeans quality needs representative
-        # data, not all of it; assignment below touches every row exactly
-        # once. This keeps the iterative fit O(sample) at 100 TB.
-        frac = max_fit_rows / n if n > max_fit_rows else None
-        proj = None
-        if coarse_dim is not None:
-            sample = base if frac is None else base.sample(fraction=frac, seed=seed)
-            proj = _pca_projection(
-                sample, vec_col=vec_col, coarse_dim=coarse_dim
-            )
-            base = base.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
-        geom = GEOM_COL if proj is not None else vec_col
-        feat = base.withColumn(
-            "_features", array_to_vector(F.col(geom).cast("array<double>"))
+        n, feat, fit_df, proj, _ = _fit_frame(
+            corpus,
+            id_col=id_col,
+            vec_col=vec_col,
+            coarse_dim=coarse_dim,
+            max_fit_rows=max_fit_rows,
+            seed=seed,
         )
-        fit_df = feat if frac is None else feat.sample(fraction=frac, seed=seed)
         model = KMeans(
-            k=k, seed=seed, featuresCol="_features", predictionCol="cell_id"
+            k=num_cells or _num_cells_default(n),
+            seed=seed,
+            featuresCol="_features",
+            predictionCol="cell_id",
         ).fit(fit_df)
         keep = [id_col, vec_col] + ([GEOM_COL] if proj is not None else [])
         assignments = model.transform(feat).select(
@@ -955,9 +979,11 @@ class IVFIndex:
     # -- persistence (absent in the reference; free here) -----------------
 
     def save(self, spark: SparkSession, path: str) -> None:
-        # centroids written LAST: its _SUCCESS marker implies the whole
-        # index (assignments + optional projection) committed.
-        #
+        """Plain parquet: assignments partitioned by cell, the optional
+        projection, then the quantizer's centroid tables — written
+        LAST, so their final ``_SUCCESS`` marker implies the whole
+        index committed. ``load`` keys the geometry on GEOM_COL's
+        presence in the assignments."""
         # repartition("cell_id") before the partitioned write: without
         # it every shuffle partition holding rows of a cell writes its
         # own file into that cell's directory — shuffle_partitions x
@@ -970,19 +996,17 @@ class IVFIndex:
             "overwrite"
         ).partitionBy("cell_id").parquet(f"{path}/assignments")
         if self.proj is not None:
-            prows = [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.proj)
-            ]
-            spark.createDataFrame(
-                prows, "row_idx INT, coeffs ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/proj")
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
+            _write_table(
+                spark, _matrix_rows(self.proj),
+                "row_idx INT, coeffs ARRAY<DOUBLE>", f"{path}/proj",
+            )
+        self._save_quantizer(spark, path)
+
+    def _save_quantizer(self, spark: SparkSession, path: str) -> None:
+        _write_table(
+            spark, _matrix_rows(self.centroids),
+            "cell_id INT, centroid ARRAY<DOUBLE>", f"{path}/centroids",
+        )
 
     @classmethod
     def load(
@@ -993,24 +1017,31 @@ class IVFIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IVFIndex":
-        cent_rows = (
-            spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-        )
-        centroids = np.vstack([np.asarray(r["centroid"]) for r in cent_rows])
+        quantizer = cls._load_quantizer(spark, path)
         assignments = spark.read.parquet(f"{path}/assignments")
         proj = None
         if GEOM_COL in assignments.columns:
-            prows = (
-                spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
-            )
-            proj = np.vstack([np.asarray(r["coeffs"]) for r in prows])
+            proj = _read_matrix(spark, f"{path}/proj", "row_idx", "coeffs")
         return cls(
-            centroids, assignments, id_col=id_col, vec_col=vec_col, proj=proj
+            assignments=assignments,
+            id_col=id_col,
+            vec_col=vec_col,
+            proj=proj,
+            **quantizer,
         )
+
+    @classmethod
+    def _load_quantizer(cls, spark: SparkSession, path: str) -> dict:
+        """The centroid state ``save`` wrote, as constructor keywords."""
+        return {
+            "centroids": _read_matrix(
+                spark, f"{path}/centroids", "cell_id", "centroid"
+            )
+        }
 
     # -- search (replaces HnswIndex::search, src/lib.rs:152-169) ----------
 
-    def _probe_cells(self, query: np.ndarray, nprobe: int) -> list[int]:
+    def _probe_cells(self, query, nprobe: int) -> list[int]:
         d = ((self.centroids - self._geom_query(query)) ** 2).sum(axis=1)
         order = np.argsort(d, kind="stable")[: max(1, nprobe)]
         return [int(c) for c in order]
@@ -1022,17 +1053,18 @@ class IVFIndex:
         *,
         nprobe: int | None = None,
         target_frac: float | None = None,
+        **probe,
     ) -> DataFrame:
         """Single-query ANN: probe nprobe cells, exact re-rank to top-k.
 
         The cell filter is a pushed-down ``cell_id IN (...)`` predicate —
         on cell-partitioned Parquet that is partition pruning, the IVF
         analogue of HNSW skipping unvisited graph regions. The probe
-        budget is ``nprobe`` cells (default 8) or, rebuild-safe, the
-        cell fraction ``target_frac`` (see ``nprobe_for_frac``).
+        budget is ``nprobe`` cells (default 8 on the flat index) or,
+        rebuild-safe, the cell fraction ``target_frac`` (see
+        ``nprobe_for_frac``).
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        cells = self._probe_cells(query, nprobe)
+        cells = self._probe_cells(query, self._nprobe(nprobe, target_frac), **probe)
         cand = self.assignments.filter(F.col("cell_id").isin(cells))
         return knn_exact(cand, list(map(float, query)), k,
                          id_col=self.id_col, vec_col=self.vec_col)
@@ -1047,6 +1079,7 @@ class IVFIndex:
         nprobe: int | None = None,
         target_frac: float | None = None,
         meta_id_col: str | None = None,
+        **probe,
     ) -> DataFrame:
         """Filtered ANN with PRE-filter semantics: the metadata predicate
         restricts the candidate set BEFORE the distance ranking, so the
@@ -1067,8 +1100,11 @@ class IVFIndex:
         probing when |matches| << |probed cells|; the caller sees
         identical results either way, so the flip is a pure cost choice.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        cells = self._probe_cells(np.asarray(query, dtype=np.float64), nprobe)
+        cells = self._probe_cells(
+            np.asarray(query, dtype=np.float64),
+            self._nprobe(nprobe, target_frac),
+            **probe,
+        )
         cand = self.assignments.filter(F.col("cell_id").isin(cells))
         keep = metadata.filter(predicate).select(
             F.col(meta_id_col or self.id_col).alias(self.id_col)
@@ -1077,6 +1113,45 @@ class IVFIndex:
         return knn_exact(
             cand, list(map(float, query)), k, id_col=self.id_col, vec_col=self.vec_col
         )
+
+    def _geom_queries(
+        self, queries: DataFrame, query_vec_col: str
+    ) -> tuple[DataFrame, str]:
+        """Queries plus the column cell ranking compares: the PROJECTED
+        query on a reduced-geometry index (exact re-rank stays on the
+        original query vector), the query vector itself otherwise."""
+        if self.proj is None:
+            return queries, query_vec_col
+        return (
+            queries.withColumn(
+                "_q_rvec", _project_udf(self.proj)(F.col(query_vec_col))
+            ),
+            "_q_rvec",
+        )
+
+    def _probed_frame(
+        self,
+        queries: DataFrame,
+        nprobe: int,
+        query_id_col: str,
+        query_vec_col: str,
+    ) -> DataFrame:
+        """Declarative probe ranking: queries x centroids (broadcast;
+        |queries| * num_cells scored rows) -> each query's top-nprobe
+        ``(query_id_col, query_vec_col, cell_id)`` rows."""
+        cent_df = queries.sparkSession.createDataFrame(
+            _matrix_rows(self.centroids), "cell_id INT, centroid ARRAY<DOUBLE>"
+        )
+        queries, q_geom_col = self._geom_queries(queries, query_vec_col)
+        qc = queries.join(F.broadcast(cent_df), how="cross").select(
+            query_id_col,
+            query_vec_col,
+            "cell_id",
+            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_cd"),
+        )
+        return top_k_per_query(
+            qc, nprobe, order=("_cd", "cell_id"), by=query_id_col, sort=False
+        ).select(query_id_col, query_vec_col, "cell_id")
 
     def search_batch(
         self,
@@ -1090,16 +1165,17 @@ class IVFIndex:
         round_digits: int | None = 4,
         impl: str = "auto",
         known_queries: int | None = None,
+        **probe,
     ) -> DataFrame:
         """Batch ANN, fully declarative (no driver-side per-query loop):
 
-        1. queries x centroids (broadcast both; the product is
-           |queries| * num_cells scored rows) -> top-nprobe cells/query;
-        2. candidates = assignments semi-joined on probed cells;
+        1. probe ranking (``_probed_frame``) -> top-nprobe cells/query;
+        2. candidates = assignments joined on the probed cells;
         3. per-query exact re-rank via ranking window.
 
-        Probe budget: ``nprobe`` cells (default 8) or the rebuild-safe
-        cell fraction ``target_frac`` (see ``nprobe_for_frac``).
+        Probe budget: ``nprobe`` cells (default 8 on the flat index) or
+        the rebuild-safe cell fraction ``target_frac`` (see
+        ``nprobe_for_frac``).
 
         ``impl``: candidate scoring strategy, same rows either way —
         ``"auto"`` (default, round 14) routes on the measured
@@ -1121,7 +1197,10 @@ class IVFIndex:
         queries lineage once per call. Routing is identical either
         way; pass it on interactive serving paths.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
+        nprobe = self._nprobe(nprobe, target_frac)
+        probed = self._probed_frame(
+            queries, nprobe, query_id_col, query_vec_col, **probe
+        )
         impl = _route_batch_impl(
             impl,
             queries,
@@ -1130,32 +1209,6 @@ class IVFIndex:
             num_cells=self.num_cells,
             dim=self._full_dim(),
             n_queries=known_queries,
-        )
-        spark = queries.sparkSession
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        cent_df = spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>")
-        # Reduced-geometry index: cell ranking compares the PROJECTED
-        # query against the reduced centroids; the exact re-rank below
-        # stays on the original query/vector columns.
-        q_geom_col = query_vec_col
-        if self.proj is not None:
-            q_geom_col = "_q_rvec"
-            queries = queries.withColumn(
-                q_geom_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
-        qc = queries.join(F.broadcast(cent_df), how="cross").select(
-            query_id_col,
-            query_vec_col,
-            "cell_id",
-            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_cd"),
-        )
-        wp = Window.partitionBy(query_id_col).orderBy("_cd", "cell_id")
-        probed = (
-            qc.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= nprobe)
-            .select(query_id_col, query_vec_col, "cell_id")
         )
         if impl == "blas":
             return _cogroup_blas_topk(
@@ -1182,13 +1235,7 @@ class IVFIndex:
             F.col(self.id_col).alias("vec_id"),
             dist.alias("dist"),
         )
-        w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-            .orderBy("query_id", "dist", "vec_id")
-        )
+        return top_k_per_query(scored, k)
 
     def search_batch_pruned(
         self,
@@ -1200,15 +1247,16 @@ class IVFIndex:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_embedding",
         round_digits: int | None = 4,
+        **probe,
     ) -> DataFrame:
         """Batch ANN over a PERSISTED cell-partitioned index — the
         production serving shape. Probe budget: ``nprobe`` cells
-        (default 8) or the rebuild-safe cell fraction ``target_frac``
-        (see ``nprobe_for_frac`` — the r12 drift study measured recall
-        0.994 -> 0.856 from serving a rebuilt index at a stale absolute
-        nprobe).
+        (default 8 on the flat index) or the rebuild-safe cell fraction
+        ``target_frac`` (see ``nprobe_for_frac`` — the r12 drift study
+        measured recall 0.994 -> 0.856 from serving a rebuilt index at
+        a stale absolute nprobe).
 
-        Probe cells are computed driver-side against the centroid matrix
+        Probe cells are computed driver-side against the centroids
         (tiny by construction: num_cells x dim), so the candidate scan
         carries a STATIC ``cell_id IN (...)`` predicate. On the
         cell-partitioned Parquet written by :meth:`save` that is
@@ -1221,18 +1269,17 @@ class IVFIndex:
         batches with a map-side top-k cut (``_pruned_blas_topk`` —
         round 12: the expression-form L2 over long arrays dominated the
         measured 384-d serve); results match :meth:`search_batch` at
-        the same nprobe, modulo distances landing within one
-        BLAS-expansion ulp of a rounding boundary (see
-        ``_pruned_blas_topk``).
+        the same probe budget, modulo distances landing within one
+        BLAS-expansion ulp of a rounding boundary (see ``_blas_topk``).
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
+        nprobe = self._nprobe(nprobe, target_frac)
         q_rows = bounded_query_collect(
             queries,
             query_id_col,
             query_vec_col,
-            caller="IVFIndex.search_batch_pruned",
+            caller=f"{type(self).__name__}.search_batch_pruned",
             reroute=(
-                "index.search_batch(queries, k, nprobe=..., "
+                "index.search_batch(queries, k, <same probe budget>, "
                 f"query_id_col={query_id_col!r}, "
                 f"query_vec_col={query_vec_col!r}) — the distributed "
                 "assign-then-join path with no driver collect"
@@ -1241,7 +1288,7 @@ class IVFIndex:
         data = []
         for r in q_rows:
             vec = [float(x) for x in r[query_vec_col]]
-            for c in self._probe_cells(vec, nprobe):
+            for c in self._probe_cells(vec, nprobe, **probe):
                 data.append((r[query_id_col], vec, c))
         return _pruned_blas_topk(
             self.assignments,
@@ -1253,24 +1300,15 @@ class IVFIndex:
             query_id_type=queries.schema[query_id_col].dataType.simpleString(),
         )
 
-    def assign_new(self, new_vectors: DataFrame) -> "IVFIndex":
-        """Incrementally index NEW vectors against the EXISTING centroids
-        (no refit): one broadcast-centroid argmin pass over the new rows,
-        unioned into the assignments. This is the streaming-ingest
-        companion (see streaming/ingest.py) — the reference cannot do
-        this at all (its graph is build-once per process). Periodic full
-        rebuilds remain advisable once drift accumulates, as in any IVF
-        system.
+    # -- ingest and maintenance -------------------------------------------
 
-        Returns a NEW IVFIndex (same centroids, extended assignments);
-        the receiver is untouched — same purity contract as
-        ``split_hot_cells``/``rebalance``, so a caller keeping the
-        pre-ingest index for per-shard serving is safe."""
-        spark = new_vectors.sparkSession
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        cent_df = spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>")
+    def _assign(self, new_vectors: DataFrame) -> DataFrame:
+        """Cell assignment for new rows against the frozen centroids:
+        one broadcast-centroid argmin pass, emitting the assignment
+        columns (``_carry()`` + ``cell_id``)."""
+        cent_df = new_vectors.sparkSession.createDataFrame(
+            _matrix_rows(self.centroids), "cell_id INT, centroid ARRAY<DOUBLE>"
+        )
         incoming = new_vectors.select(self.id_col, self.vec_col)
         if self.proj is not None:
             # re-project with THIS index's transform (an incoming shard's
@@ -1278,39 +1316,48 @@ class IVFIndex:
             incoming = incoming.withColumn(
                 GEOM_COL, _project_udf(self.proj)(F.col(self.vec_col))
             )
-        keep = [self.id_col, self.vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
+        keep = self._carry()
         scored = incoming.join(F.broadcast(cent_df), how="cross").select(
             *keep,
             "cell_id",
             l2_squared(F.col(self.geom_col), F.col("centroid")).alias("_d"),
         )
-        from pyspark.sql import Window as _W
+        return top_k_per_query(
+            scored, 1, order=("_d", "cell_id"), by=self.id_col, sort=False
+        ).select(*keep, "cell_id")
 
-        w = _W.partitionBy(self.id_col).orderBy("_d", "cell_id")
-        assigned = (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") == 1)
-            .select(*keep, "cell_id")
+    def assign_new(self, new_vectors: DataFrame) -> "IVFIndex":
+        """Incrementally index NEW vectors against the EXISTING centroids
+        (no refit): one assignment pass over the new rows only
+        (``_assign`` — a broadcast-centroid argmin on the flat index,
+        the build's own two-stage argmin on the hierarchical one),
+        unioned into the assignments. This is the streaming-ingest
+        companion (see streaming/ingest.py) — the reference cannot do
+        this at all (its graph is build-once per process). Periodic full
+        rebuilds remain advisable once drift accumulates, as in any IVF
+        system.
+
+        Returns a NEW index of the same class (same centroids, extended
+        assignments); the receiver is untouched — same purity contract
+        as ``split_hot_cells``/``rebalance``, so a caller keeping the
+        pre-ingest index for per-shard serving is safe."""
+        # a shallow copy: quantizer state is never mutated in place
+        grown = copy.copy(self)
+        grown.assignments = self.assignments.unionByName(
+            self._assign(new_vectors)
         )
-        return IVFIndex(
-            self.centroids,
-            self.assignments.unionByName(assigned),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            proj=self.proj,
-        )
+        return grown
 
     def merge(self, other: "IVFIndex") -> "IVFIndex":
         """Merge another IVF index into this one's cell structure — the
         sharded-build pattern (Faiss ``IndexIVF.merge_from``): build an
         index per shard/day IN PARALLEL, merge for serving. Semantics:
         THIS index's centroids win; the other index's vectors are
-        re-assigned to this index's nearest cells in one
-        broadcast-centroid argmin pass (``assign_new``) over the other
-        side only — this index's assignment table is untouched, no
-        KMeans refit, nothing corpus-sized shuffles. Ids are assumed
+        re-assigned to this index's nearest cells in one pass
+        (``assign_new``) over the other side only — this index's
+        assignment table is untouched, no KMeans refit, nothing
+        corpus-sized shuffles. ``other`` may be either index class —
+        only its (id, vector) rows are read. Ids are assumed
         disjoint (shards partition the corpus by construction);
         ``merge_verdict``/``cell_stats`` pin exactly-one-cell-per-id
         after the fact. When shard distributions differ enough to
@@ -1364,7 +1411,39 @@ class IVFIndex:
         max_share * nprobe bounds the fraction of the corpus a probe
         reads. Remedies: ``coarse_dim`` at build (high-d geometry),
         ``rebalance()`` (drift/skew)."""
-        return _occupancy_stats(self.assignments)
+        row = (
+            self.assignments.groupBy("cell_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.count(F.lit(1)).alias("cells"),
+                F.sum("n").alias("rows"),
+                F.max("n").alias("max"),
+                F.expr("percentile_approx(n, 0.5)").alias("p50"),
+                F.expr("percentile_approx(n, 0.99)").alias("p99"),
+            )
+            .collect()[0]
+        )
+        if int(row["cells"] or 0) == 0:
+            # Empty assignments: every aggregate above is NULL — report
+            # the (obviously unhealthy) empty index instead of letting
+            # the health check itself raise TypeError (r10 advisor).
+            return {
+                "cells": 0, "rows": 0, "max": 0, "p50": 0, "p99": 0,
+                "max_share": 0.0,
+            }
+        total = int(row["rows"] or 0)
+        return {
+            "cells": int(row["cells"]),
+            "rows": total,
+            "max": int(row["max"]),
+            "p50": int(row["p50"]),
+            "p99": int(row["p99"]),
+            "max_share": (int(row["max"]) / total) if total else 0.0,
+        }
+
+    def _occupancy(self) -> dict:
+        """cell_id -> row count (num_cells driver rows)."""
+        return {r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()}
 
     def split_hot_cells(
         self,
@@ -1380,61 +1459,69 @@ class IVFIndex:
         every cell with occupancy > ``factor`` x mean is split in two
         by a seeded local 2-means over (a bounded sample of) its own
         vectors; one half keeps the cell id, the other gets a fresh id
-        appended after the existing centroids — ids of cold cells (and
-        the saved parquet partitions holding them) never change.
+        after every existing one (``_split`` records it) — ids of cold
+        cells (and the saved parquet partitions holding them) never
+        change.
 
         Cost shape: the per-cell fits run in PARALLEL (one
         ``applyInPandas`` group per hot cell — the HierarchicalIVF
         level-2 discipline); only HOT-cell rows are re-scored, against
         exactly 2 centroids each; cold rows are untouched. Driver-side
         state is the occupancy table (num_cells rows) and 2 x |hot|
-        sub-centroids. Returns a NEW IVFIndex (assignments lazily
+        sub-centroids. Returns a NEW index (assignments lazily
         re-derived; the caller persists/saves as usual)."""
-        occ = {
-            r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
-        }
+        return self._split_hot(
+            self._occupancy(),
+            factor=factor,
+            seed=seed,
+            max_cell_fit_rows=max_cell_fit_rows,
+        )
+
+    def _split_hot(
+        self,
+        occ: dict,
+        *,
+        factor: float,
+        seed: int,
+        max_cell_fit_rows: int = 100_000,
+    ) -> "IVFIndex":
         if not occ:
             return self
         mean_occ = sum(occ.values()) / len(occ)
         hot = sorted(c for c, n in occ.items() if n > factor * mean_occ and n >= 2)
         if not hot:
             return self
-
-        vec_col = self.vec_col
-        geom_col = self.geom_col
-
         hot_rows = self.assignments.filter(F.col("cell_id").isin(hot))
         subs = _fit_hot_subcentroids(
             hot_rows,
-            geom_col=geom_col,
+            geom_col=self.geom_col,
             seed=seed,
             max_cell_fit_rows=max_cell_fit_rows,
         )
-
-        k_old = self.centroids.shape[0]
-        new_centroids = self.centroids.copy()
-        new_id = {}
-        appended = []
-        for i, c in enumerate(hot):
-            new_centroids[c] = subs[(c, 0)]
-            new_id[c] = k_old + i
-            appended.append(subs[(c, 1)])
-        new_centroids = np.vstack([new_centroids] + appended)
-
-        carry = [self.id_col, vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
+        # fresh ids follow every existing slot, in hot-cell order
+        new_id = {c: self.centroids.shape[0] + i for i, c in enumerate(hot)}
+        carry = self._carry()
         reassigned = _reassign_hot_rows(
-            hot_rows, subs, new_id, geom_col=geom_col, carry=carry
+            hot_rows, subs, new_id, geom_col=self.geom_col, carry=carry
         )
         cold = self.assignments.filter(~F.col("cell_id").isin(hot)).select(
             *carry, "cell_id"
         )
+        return self._split(subs, new_id, cold.unionByName(reassigned))
+
+    def _split(self, subs: dict, new_id: dict, assignments: DataFrame) -> "IVFIndex":
+        """The index after splitting each hot cell ``c`` of ``new_id``:
+        sub-centroid 0 replaces ``c``'s centroid, sub-centroid 1 is
+        appended as ``new_id[c]``."""
+        centroids = self.centroids.copy()
+        for c in new_id:
+            centroids[c] = subs[(c, 0)]
+        centroids = np.vstack([centroids] + [subs[(c, 1)] for c in new_id])
         return IVFIndex(
-            new_centroids,
-            cold.unionByName(reassigned),
+            centroids,
+            assignments,
             id_col=self.id_col,
-            vec_col=vec_col,
+            vec_col=self.vec_col,
             proj=self.proj,
         )
 
@@ -1443,24 +1530,29 @@ class IVFIndex:
         *,
         factor: float = 2.0,
         seed: int = DEFAULT_SEED,
-        max_rounds: int = 4,
     ) -> "IVFIndex":
         """Iterate ``split_hot_cells`` until no cell exceeds ``factor``
-        x mean occupancy (or the round budget runs out). One round is
-        NOT enough when a hot cell holds a tight drift cluster plus
-        background: 2-means first separates cluster from background
-        (the right split — but the cluster side stays hot), and only
-        subsequent rounds halve the cluster itself. Each round re-seeds
-        deterministically and cuts lineage with ``localCheckpoint`` so
-        round N+1's fits don't re-execute round N's reassignment."""
-        idx = self
-        for r in range(max_rounds):
-            nxt = idx.split_hot_cells(factor=factor, seed=seed + r)
+        x mean occupancy. One round is NOT enough when a hot cell holds
+        a tight drift cluster plus background: 2-means first separates
+        cluster from background (the right split — but the cluster side
+        stays hot), and only subsequent rounds halve the cluster itself.
+        The loop stops early only when a round fails to shrink the
+        hottest cell — a degenerate split (e.g. a cell of duplicate
+        vectors) that further rounds cannot fix; otherwise the hottest
+        cell shrinks every round, so the loop terminates. Each round
+        re-seeds deterministically (``seed + round``) and cuts lineage
+        with ``localCheckpoint`` so round N+1's fits don't re-execute
+        round N's reassignment."""
+        idx, occ, r = self, self._occupancy(), 0
+        while True:
+            nxt = idx._split_hot(occ, factor=factor, seed=seed + r)
             if nxt is idx:
                 return idx
             nxt.assignments = nxt.assignments.localCheckpoint(eager=False)
-            idx = nxt
-        return idx
+            nxt_occ = nxt._occupancy()
+            if max(nxt_occ.values()) >= max(occ.values()):
+                return nxt
+            idx, occ, r = nxt, nxt_occ, r + 1
 
 
 AUTO_COARSE_DIM = 64  # the r9/r12-measured healthy coarse geometry
@@ -1575,7 +1667,7 @@ class LSHIndex:
         ).orderBy("dist", "vec_id")
 
 
-class HierarchicalIVF:
+class HierarchicalIVF(IVFIndex):
     """Two-level IVF coarse quantizer — the standard escape when the
     cell count outgrows a single KMeans fit (SCALE.md: ~3e5 cells at
     1e11 vectors makes one flat KMeans|| fit the build bottleneck).
@@ -1585,20 +1677,51 @@ class HierarchicalIVF:
        ``k1`` super-cells (small fit);
     2. level-2: the sample is assigned to super-cells, and EVERY
        super-cell's ``k2``-means fit runs IN PARALLEL as one
-       ``applyInPandas`` group (seeded numpy Lloyd iterations — a few
-       thousand sample rows per group, no sklearn dependency). The
-       expensive part of a huge-k build becomes an embarrassingly
-       parallel stage instead of one giant fit;
-    3. assignment: one Arrow pass over the corpus computes
-       ``argmin`` against the broadcast (k1 x dim) matrix, then against
-       that super-cell's (k2 x dim) block — 2·sqrt(K) distance rows per
+       ``applyInPandas`` group (seeded numpy Lloyd — a few thousand
+       sample rows per group, no sklearn dependency). The expensive
+       part of a huge-k build becomes an embarrassingly parallel stage
+       instead of one giant fit;
+    3. assignment: one Arrow pass over the corpus computes ``argmin``
+       against the broadcast (k1 x dim) matrix, then against that
+       super-cell's (k2 x dim) block — 2·sqrt(K) distance rows per
        vector instead of K for the flat index.
 
-    Search mirrors the build asymmetry: rank super-cells (tiny), rank
-    sub-cells inside the probed super-cells, then a partition-prunable
-    ``cell_id IN (...)`` candidate scan + exact re-rank, exactly like
-    the flat ``IVFIndex`` probe.
+    Cells are COMPOSITE ids ``l1 * k2 + l2``; cells created by
+    ``split_hot_cells`` after build are OVERFLOW cells with fresh ids
+    past that range, each ranked and assigned as one more sub-cell of
+    its parent super-cell. ``centroids`` is the dense composite-id
+    matrix (unused slots of under-filled blocks hold a far-away
+    phantom centroid, so they never rank), which is all the inverted
+    lists and ``IVFPQIndex.build`` need; ``num_cells`` counts real
+    cells only.
+
+    Everything after "which cells" is the flat :class:`IVFIndex`'s:
+    search, filtered/batch/pruned search, ingest union, merge,
+    occupancy, splitting and rebalance, and the assignments half of
+    persistence. This class overrides only the quantizer:
+
+    - probe ranking — ``_probe_cells`` ranks only the sub-cells of the
+      ``nprobe_l1`` nearest super-cells (default: all; every search
+      method accepts ``nprobe_l1=`` and forwards it), and
+      ``_probed_frame`` is the two-window declarative form
+      ``search_batch`` uses;
+    - assignment of new rows — the build's two-stage argmin
+      (``_hier_assign_fn``);
+    - the default probe budget — half of all cells (flat: 8), the
+      recall-equivalent operating point: on sf0.01 hier (8, 32) scored
+      0.931 recall@10 vs flat nprobe=8 0.913;
+    - split bookkeeping — a split cell's second half becomes an
+      overflow cell of the same parent;
+    - the centroid tables ``save``/``load`` write and read (l1, l2,
+      overflow, stride).
+
+    L1 pruning (``nprobe_l1 < k1``) only pays when sqrt(K) centroids no
+    longer fit a broadcast / single argsort — K ≳ 1e6 cells (SCALE.md);
+    below that the hierarchy's win is the parallel BUILD and the
+    2·sqrt(K) assignment pass, not search-time pruning.
     """
+
+    _PHANTOM_CENTROID = 1e15  # unused composite slots: never probed
 
     def __init__(
         self,
@@ -1614,102 +1737,47 @@ class HierarchicalIVF:
     ):
         self.l1_centroids = np.asarray(l1_centroids, dtype=np.float64)
         self.l2_centroids = {int(k): np.asarray(v, dtype=np.float64) for k, v in l2_centroids.items()}
-        # Overflow cells (round 13, drift repair): cells created by
-        # split_hot_cells AFTER build, living OUTSIDE the composite
-        # l1*stride+l2 id range (ids >= k1*stride, so saved partitions
-        # and the stride decode never change). Each maps
-        # cell_id -> (parent_l1, centroid); an overflow cell behaves as
-        # one more sub-cell of its parent super-cell in every probe,
-        # ranking, and assignment path.
+        # overflow: cell_id -> (parent_l1, centroid), ids >= k1 * stride
+        # so saved partitions and the stride decode never change
         self.overflow = {
             int(c): (int(p), np.asarray(v, dtype=np.float64))
             for c, (p, v) in (overflow or {}).items()
         }
-        self.assignments = assignments
-        self.id_col = id_col
-        self.vec_col = vec_col
-        # Reduced-space coarse geometry (round 10): the flat index's
-        # round-9 coarse_dim fix, threaded through BOTH levels — the
-        # level-1 KMeans has the identical high-d winner-take-all
-        # collapse mechanism (a mean-shrunk centroid beats every
-        # data-like centroid at ~sqrt(d)·sigma vs ~sqrt(2d)·sigma).
-        # When set, l1/l2 centroids live in the projected space,
-        # assignments carry GEOM_COL, and exact re-rank always reads
-        # the original vec_col.
-        self.proj = None if proj is None else np.asarray(proj, dtype=np.float64)
-        # The composite-cell encoding is cell_id = l1 * stride + l2 with
-        # the stride FIXED AT BUILD TIME (the requested k2), not inferred
-        # from the realized sub-block sizes: if every super-cell
-        # under-fills (tiny fit sample), max(len(block)) < the build
-        # stride and every probe would decode cell ids on the wrong
-        # stride. ``save``/``load`` round-trip it explicitly.
+        # The stride is FIXED AT BUILD TIME (the requested k2), not
+        # inferred from the realized sub-block sizes: if every
+        # super-cell under-fills (tiny fit sample), max(len(block)) <
+        # the build stride and every probe would decode cell ids on the
+        # wrong stride. ``save``/``load`` round-trip it explicitly.
         self.k2 = (
             int(k2_stride)
             if k2_stride is not None
             else max(len(v) for v in self.l2_centroids.values())
         )
+        n_slots = self.k2 * len(self.l1_centroids)
+        if self.overflow:
+            n_slots = max(n_slots, max(self.overflow) + 1)
+        dense = np.full(
+            (n_slots, self.l1_centroids.shape[1]), self._PHANTOM_CENTROID
+        )
+        # parent super-cell per slot; -1 marks a phantom slot
+        self._parent = np.full(n_slots, -1, dtype=np.int64)
+        for l1, block in self.l2_centroids.items():
+            dense[l1 * self.k2 : l1 * self.k2 + len(block)] = block
+            self._parent[l1 * self.k2 : l1 * self.k2 + len(block)] = l1
+        for cid, (parent, cent) in self.overflow.items():
+            dense[cid] = cent
+            self._parent[cid] = parent
+        super().__init__(
+            dense, assignments, id_col=id_col, vec_col=vec_col, proj=proj
+        )
 
     @property
     def num_cells(self) -> int:
-        """Total sub-cells (incl. overflow) — the denominator of a
-        fraction-expressed probe budget, mirroring
-        ``IVFIndex.num_cells``."""
-        return sum(len(v) for v in self.l2_centroids.values()) + len(
-            self.overflow
-        )
+        """Real cells (sub-cells plus overflow), never phantom slots."""
+        return int((self._parent >= 0).sum())
 
-    def nprobe_for_frac(self, target_frac: float) -> int:
-        """nprobe probing ~``target_frac`` of this index's composite
-        cells (see ``IVFIndex.nprobe_for_frac`` and ``_resolve_nprobe``
-        for the measured rebuild footgun this exists to close)."""
-        return _resolve_nprobe(
-            None, target_frac, self.num_cells, default=8
-        )
-
-    def nprobe_for_rows_frac(self, target_rows_frac: float) -> int:
-        """Worst-case ROWS-budget nprobe over the composite cells —
-        same contract as ``IVFIndex.nprobe_for_rows_frac``."""
-        return _nprobe_for_rows_frac(self.cell_stats(), target_rows_frac)
-
-    # routing estimate: same contract as the flat class
-    _corpus_rows = IVFIndex._corpus_rows
-
-    @property
-    def geom_col(self) -> str:
-        """Column carrying the cell-geometry vectors — same contract
-        as ``IVFIndex.geom_col`` (the PQ builder reads it on either
-        class)."""
-        return GEOM_COL if self.proj is not None else self.vec_col
-
-    _PHANTOM_CENTROID = 1e15  # unused composite slots: never probed
-
-    def pq_cell_centroids(self) -> np.ndarray:
-        """Dense (max_cell_id+1, geom_dim) centroid matrix over the
-        COMPOSITE cell ids — the surface ``IVFPQIndex.build`` needs to
-        treat this class like the flat one (round 14: quantized serving
-        on the serving-scale class). Composite ids are l1*stride+l2;
-        under-filled blocks leave gaps, which get a far-away phantom
-        centroid (1e15 per axis) so flat probe ranking can never select
-        an empty slot; overflow cells land at their own ids."""
-        gdim = self.l1_centroids.shape[1]
-        max_id = self.k2 * len(self.l1_centroids) - 1
-        if self.overflow:
-            max_id = max(max_id, max(self.overflow))
-        out = np.full((max_id + 1, gdim), self._PHANTOM_CENTROID)
-        for l1, block in self.l2_centroids.items():
-            for l2, row in enumerate(block):
-                out[l1 * self.k2 + l2] = row
-        for cid, (_, cent) in self.overflow.items():
-            out[cid] = cent
-        return out
-
-    def _full_dim(self) -> int:
-        """Original vector dimension (see ``IVFIndex._full_dim``) —
-        proj rows for reduced geometry, the l1 centroid width
-        otherwise."""
-        if self.proj is not None:
-            return int(self.proj.shape[0])
-        return int(self.l1_centroids.shape[1])
+    def _default_nprobe(self) -> int:
+        return max(1, self.num_cells // 2)
 
     @classmethod
     def build(
@@ -1732,57 +1800,39 @@ class HierarchicalIVF:
         same geometry, and a collapsed level 1 starves every level-2
         fit of its own cell's data). Exact re-rank always reads the
         original vectors, so full probe == exact at any projection."""
-        import pandas as pd
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
-        n = corpus.count()
-        base = corpus.select(F.col(id_col), F.col(vec_col))
-        frac = max_fit_rows / n if n > max_fit_rows else None
-        proj = None
-        if coarse_dim is not None:
-            sample = base if frac is None else base.sample(fraction=frac, seed=seed)
-            proj = _pca_projection(sample, vec_col=vec_col, coarse_dim=coarse_dim)
-            base = base.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
-        geom = GEOM_COL if proj is not None else vec_col
-        feat = base.withColumn(
-            "_f", array_to_vector(F.col(geom).cast("array<double>"))
+        _, _, fit_df, proj, geom = _fit_frame(
+            corpus,
+            id_col=id_col,
+            vec_col=vec_col,
+            coarse_dim=coarse_dim,
+            max_fit_rows=max_fit_rows,
+            seed=seed,
         )
-        fit_df = feat
-        if frac is not None:
-            fit_df = feat.sample(fraction=frac, seed=seed)
-        l1_model = KMeans(k=k1, seed=seed, featuresCol="_f", predictionCol="l1").fit(fit_df)
+        l1_model = KMeans(
+            k=k1, seed=seed, featuresCol="_features", predictionCol="l1"
+        ).fit(fit_df)
         l1_cent = np.vstack([np.asarray(c) for c in l1_model.clusterCenters()])
 
-        # Parallel level-2 fits: one seeded numpy Lloyd run per
-        # super-cell group. Deterministic: seed derives from (seed, l1).
-        # Fits run over the GEOMETRY column — reduced space when
-        # coarse_dim is set, the raw vectors otherwise.
-        sample_l1 = l1_model.transform(fit_df).select("l1", geom)
-
+        # Parallel level-2 fits: one seeded Lloyd run per super-cell
+        # group over the GEOMETRY column. Deterministic: the seed
+        # derives from (seed, l1).
         def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
             l1 = int(pdf["l1"].iloc[0])
-            x = np.vstack(pdf[geom].apply(np.asarray, dtype=np.float64))
-            k = min(k2, len(x))
-            rng = np.random.RandomState(seed * 100003 + l1)
-            cent = x[rng.choice(len(x), size=k, replace=False)]
-            for _ in range(lloyd_iters):
-                d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-                lab = d.argmin(axis=1)
-                for j in range(k):
-                    m = lab == j
-                    if m.any():
-                        cent[j] = x[m].mean(axis=0)
+            cent = _lloyd(_stack(pdf[geom]), k2, seed * 100003 + l1, lloyd_iters)
             return pd.DataFrame(
                 {
-                    "l1": [l1] * k,
-                    "l2": list(range(k)),
+                    "l1": [l1] * len(cent),
+                    "l2": list(range(len(cent))),
                     "centroid": [c.tolist() for c in cent],
                 }
             )
 
         cent_rows = (
-            sample_l1.groupBy("l1")
+            l1_model.transform(fit_df)
+            .select("l1", geom)
+            .groupBy("l1")
             .applyInPandas(fit_group, schema="l1 INT, l2 INT, centroid ARRAY<DOUBLE>")
             .collect()
         )
@@ -1796,42 +1846,21 @@ class HierarchicalIVF:
         for l1 in range(k1):
             if l1 not in l2_cent_np:
                 l2_cent_np[l1] = l1_cent[l1 : l1 + 1]
-
-        # Full-corpus assignment: one Arrow pass, two-stage argmin
-        # against broadcast centroid blocks (2*sqrt(K) rows per vector).
-        # With coarse_dim the pass projects each batch itself (one
-        # matmul) — geometry argmins run reduced, the emitted row keeps
-        # the ORIGINAL vector plus GEOM_COL for maintenance parity with
-        # the flat index's layout (load keys on the column's presence).
-        spark = corpus.sparkSession
-        bc = spark.sparkContext.broadcast((l1_cent, l2_cent_np, k2, proj, {}))
-        assign = _hier_assign_fn(bc, id_col, vec_col)
-
-        # Honor the caller's id column name AND type (the flat IVFIndex
-        # path does; hardcoding `vec_id BIGINT` here broke custom — e.g.
-        # string — ids under the engine facade's hierarchical build).
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        geom_field = ", _rvec ARRAY<FLOAT>" if proj is not None else ""
-        assignments = corpus.select(id_col, vec_col).mapInPandas(
-            assign,
-            schema=(
-                f"{id_col} {id_type}, {vec_col} ARRAY<FLOAT>, "
-                f"cell_id INT{geom_field}"
-            ),
-        )
-        return cls(
+        idx = cls(
             l1_cent,
             l2_cent_np,
-            assignments,
+            None,
             id_col=id_col,
             vec_col=vec_col,
             k2_stride=k2,
             proj=proj,
         )
+        idx.assignments = idx._assign(corpus)
+        return idx
 
     def _overflow_by_parent(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
         """Overflow cells grouped per super-cell: l1 -> (cell ids,
-        centroid matrix) — the shape every probe/assign path consumes."""
+        centroid matrix) — the shape the assignment pass consumes."""
         by_parent: dict[int, tuple[list, list]] = {}
         for cid, (parent, cent) in sorted(self.overflow.items()):
             by_parent.setdefault(parent, ([], []))
@@ -1842,296 +1871,78 @@ class HierarchicalIVF:
             for p, (ids, cents) in by_parent.items()
         }
 
-    def _probe_cells(self, query, *, nprobe_l1: int, nprobe: int) -> list[int]:
-        q = np.asarray(query, dtype=np.float64)
-        if self.proj is not None:
-            q = q @ self.proj
+    def _probe_cells(
+        self, query, nprobe: int, *, nprobe_l1: int | None = None
+    ) -> list[int]:
+        """The ``nprobe`` nearest cells among the sub-cells (overflow
+        included) of the ``nprobe_l1`` nearest super-cells (default:
+        all), ties broken by cell id."""
+        q = self._geom_query(query)
+        if nprobe_l1 is None:
+            nprobe_l1 = len(self.l1_centroids)
         d1 = ((self.l1_centroids - q) ** 2).sum(axis=1)
         l1s = np.argsort(d1, kind="stable")[: max(1, nprobe_l1)]
-        ovf = self._overflow_by_parent()
-        scored: list[tuple[float, int]] = []
-        for l1 in l1s:
-            cc = self.l2_centroids[int(l1)]
-            d2 = ((cc - q) ** 2).sum(axis=1)
-            for l2, dv in enumerate(d2):
-                scored.append((float(dv), int(l1) * self.k2 + l2))
-            ov = ovf.get(int(l1))
-            if ov is not None:
-                ids, cents = ov
-                dov = ((cents - q) ** 2).sum(axis=1)
-                for cid, dv in zip(ids, dov):
-                    scored.append((float(dv), int(cid)))
-        scored.sort()
-        return [c for _, c in scored[: max(1, nprobe)]]
+        eligible = np.isin(self._parent, l1s)
+        d = ((self.centroids - q) ** 2).sum(axis=1)
+        d[~eligible] = np.inf
+        order = np.argsort(d, kind="stable")
+        return [int(c) for c in order[: min(max(1, nprobe), int(eligible.sum()))]]
 
-    def search(
-        self,
-        query,
-        k: int,
-        *,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-    ) -> DataFrame:
-        """Probe ``nprobe`` sub-cells drawn from the ``nprobe_l1``
-        closest super-cells, then exact re-rank. ``target_frac``
-        expresses the sub-cell budget as a cell fraction instead
-        (rebuild-safe; see ``nprobe_for_frac``).
-
-        Defaults are the RECALL-EQUIVALENT operating point vs the flat
-        ``IVFIndex`` at the same probed-corpus fraction: rank ALL
-        super-cells (``nprobe_l1=k1`` — the L1 table is sqrt(K) rows,
-        ranking it costs nothing) and take half of all sub-cells
-        (matching flat's ``nprobe=8`` of 16). Measured on sf0.01
-        (structure-free uniform corpus, the worst case): hier (8, 32)
-        -> 0.931 recall@10 vs flat (nprobe=8) -> 0.913. The OLD default
-        (3, 8) probed only 12.5% of the corpus and scored 0.512-0.550 —
-        an unequal-budget comparison, not an operator deficiency.
-
-        Crossover guidance (SCALE.md): L1 pruning (``nprobe_l1 < k1``)
-        only pays when sqrt(K) centroids no longer fit a broadcast /
-        single argsort — i.e. K ≳ 1e6 cells. Below that, keep
-        ``nprobe_l1=k1`` and spend the probe budget on ``nprobe``; the
-        hierarchy's real win at small K is the parallel BUILD (per-
-        super-cell L2 fits) and the 2*sqrt(K) assignment pass, not
-        search-time L1 pruning.
-        """
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        cells = self._probe_cells(query, nprobe_l1=nprobe_l1, nprobe=nprobe)
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
-        return knn_exact(cand, list(map(float, query)), k,
-                         id_col=self.id_col, vec_col=self.vec_col)
-
-    def search_batch(
+    def _probed_frame(
         self,
         queries: DataFrame,
-        k: int,
+        nprobe: int,
+        query_id_col: str,
+        query_vec_col: str,
         *,
         nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_embedding",
-        round_digits: int | None = 4,
-        impl: str = "auto",
-        known_queries: int | None = None,
     ) -> DataFrame:
-        """Batch probe, fully declarative (no driver-side per-query
-        loop) — the two-level twin of ``IVFIndex.search_batch``:
-
-        1. queries x L1 centroids (broadcast; |queries| * k1 rows) ->
-           top-``nprobe_l1`` super-cells per query;
-        2. join the probed super-cells to the flattened (l1, l2) table,
-           rank the exposed sub-cells per query -> top-``nprobe``
-           composite cells;
-        3. candidates = assignments joined on the probed cells,
-           per-query exact re-rank via ranking window.
-
-        Defaults mirror :meth:`search`: all super-cells, half of all
-        sub-cells (the flat-equivalent probe budget). ``target_frac``
-        expresses the sub-cell budget as a cell fraction instead
-        (rebuild-safe; see ``nprobe_for_frac``). ``impl`` routes
-        candidate scoring exactly as ``IVFIndex.search_batch``:
-        ``"auto"`` (default, round 14) picks expr/blas on the measured
-        volume thresholds (``_route_batch_impl``); an explicit
-        ``"expr"`` above the probed-pairs broadcast ceiling raises
-        naming ``"blas"`` — the r13 top-decade run (10k queries x 5M x
-        384-d) measured the unguarded expr arm >=5x (killed
-        unfinished) vs 532 s blas. ``known_queries`` (round 15): pass
-        the batch size when known to skip the router's bounded
-        counting job — same contract as ``IVFIndex.search_batch``.
-        """
+        """Two-window declarative probe ranking: queries x L1 centroids
+        (broadcast; |queries| * k1 rows) -> top-``nprobe_l1``
+        super-cells per query; join those to the (l1, cell) table
+        (overflow cells ride as extra sub-cells of their parent — the
+        centroid set ``_probe_cells`` scores) and rank the exposed
+        cells -> top-``nprobe`` per query."""
         if nprobe_l1 is None:
             nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        impl = _route_batch_impl(
-            impl,
-            queries,
-            nprobe=nprobe,
-            n_rows=self._corpus_rows() if impl == "auto" else 0,
-            num_cells=self.num_cells,
-            dim=self._full_dim(),
-            n_queries=known_queries,
-        )
         spark = queries.sparkSession
-        l1_rows = [
-            (int(i), [float(x) for x in row])
-            for i, row in enumerate(self.l1_centroids)
-        ]
-        l1_df = spark.createDataFrame(l1_rows, "l1 INT, centroid ARRAY<DOUBLE>")
-        l2_rows = [
-            (int(l1), int(l1) * self.k2 + int(l2), [float(x) for x in row])
-            for l1, block in sorted(self.l2_centroids.items())
-            for l2, row in enumerate(block)
-        ]
-        # Overflow cells rank as extra sub-cells of their parent — the
-        # declarative path sees exactly the centroid set _probe_cells
-        # scores driver-side.
-        l2_rows += [
-            (int(parent), int(cid), [float(x) for x in cent])
-            for cid, (parent, cent) in sorted(self.overflow.items())
-        ]
+        l1_df = spark.createDataFrame(
+            _matrix_rows(self.l1_centroids), "l1 INT, centroid ARRAY<DOUBLE>"
+        )
         l2_df = spark.createDataFrame(
-            l2_rows, "l1 INT, cell_id INT, centroid ARRAY<DOUBLE>"
+            [
+                (int(parent), cid, row)
+                for (cid, row), parent in zip(
+                    _matrix_rows(self.centroids), self._parent
+                )
+                if parent >= 0
+            ],
+            "l1 INT, cell_id INT, centroid ARRAY<DOUBLE>",
         )
-        # Reduced-geometry index: BOTH centroid rankings compare the
-        # PROJECTED query against the reduced centroids; the exact
-        # re-rank below stays on the original query/vector columns.
-        q_geom_col = query_vec_col
-        if self.proj is not None:
-            q_geom_col = "_q_rvec"
-            queries = queries.withColumn(
-                q_geom_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
-        qcols = [query_id_col, query_vec_col] + (
-            [q_geom_col] if q_geom_col != query_vec_col else []
-        )
+        queries, q_geom_col = self._geom_queries(queries, query_vec_col)
+        qcols = list(dict.fromkeys([query_id_col, query_vec_col, q_geom_col]))
         q1 = queries.join(F.broadcast(l1_df), how="cross").select(
             *qcols,
             "l1",
             l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_d1"),
         )
-        w1 = Window.partitionBy(query_id_col).orderBy("_d1", "l1")
-        probed_l1 = (
-            q1.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= nprobe_l1)
-            .select(*qcols, "l1")
-        )
+        probed_l1 = top_k_per_query(
+            q1, nprobe_l1, order=("_d1", "l1"), by=query_id_col, sort=False
+        ).select(*qcols, "l1")
         q2 = probed_l1.join(F.broadcast(l2_df), on="l1").select(
             query_id_col,
             query_vec_col,
             "cell_id",
             l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_d2"),
         )
-        w2 = Window.partitionBy(query_id_col).orderBy("_d2", "cell_id")
-        probed = (
-            q2.withColumn("_r2", F.row_number().over(w2))
-            .filter(F.col("_r2") <= nprobe)
-            .select(query_id_col, query_vec_col, "cell_id")
-        )
-        if impl == "blas":
-            return _cogroup_blas_topk(
-                probed,
-                self.assignments,
-                k,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-                round_digits=round_digits,
-                query_id_type=queries.schema[
-                    query_id_col
-                ].dataType.simpleString(),
-            )
-        cand = self.assignments.join(F.broadcast(probed), on="cell_id")
-        dist = l2_squared(F.col(self.vec_col), F.col(query_vec_col))
-        if round_digits is not None:
-            dist = F.round(dist, round_digits)
-        scored = cand.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(self.id_col).alias("vec_id"),
-            dist.alias("dist"),
-        )
-        w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-            .orderBy("query_id", "dist", "vec_id")
-        )
+        return top_k_per_query(
+            q2, nprobe, order=("_d2", "cell_id"), by=query_id_col, sort=False
+        ).select(query_id_col, query_vec_col, "cell_id")
 
-    def search_batch_pruned(
-        self,
-        queries: DataFrame,
-        k: int,
-        *,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_embedding",
-        round_digits: int | None = 4,
-    ) -> DataFrame:
-        """Batch ANN over a PERSISTED cell-partitioned hierarchical
-        index — the production serving shape, the two-level twin of
-        :meth:`IVFIndex.search_batch_pruned` (round 11, verdict item 3).
-        ``target_frac`` expresses the sub-cell budget as a cell
-        fraction instead of an absolute nprobe (rebuild-safe; see
-        ``nprobe_for_frac``).
-
-        Both centroid levels are driver-resident by construction
-        (k1 + k1·k2 ≈ 2·sqrt(K) rows), so the two-stage probe ranking
-        runs driver-side and the candidate scan carries a STATIC
-        ``cell_id IN (...)`` predicate over the COMPOSITE cells. On the
-        cell-partitioned Parquet written by :meth:`save` that is
-        partition pruning (``PartitionFilters`` in the plan): only the
-        probed cells' files are read — probed bytes scale with nprobe
-        cells, not with N. Queries are broadcast-small by contract
-        (same as ``knn_batch``); results match :meth:`search_batch` at
-        the same (nprobe_l1, nprobe) modulo rounding-boundary ulp ties
-        (see ``_pruned_blas_topk``). Reduced-
-        geometry (``coarse_dim``) indexes rank probes in the projected
-        space via :meth:`_probe_cells`; the exact re-rank below always
-        reads the original vectors."""
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        # Bounded collect (round 12): same broadcast-small contract and
-        # same loud guard as knn_batch / IVFIndex.search_batch_pruned.
-        q_rows = bounded_query_collect(
-            queries,
-            query_id_col,
-            query_vec_col,
-            caller="HierarchicalIVF.search_batch_pruned",
-            reroute=(
-                "index.search_batch(queries, k, nprobe_l1=..., nprobe=..., "
-                f"query_id_col={query_id_col!r}, "
-                f"query_vec_col={query_vec_col!r}) — the distributed "
-                "assign-then-join path with no driver collect"
-            ),
-        )
-        data = []
-        for r in q_rows:
-            vec = [float(x) for x in r[query_vec_col]]
-            for c in self._probe_cells(vec, nprobe_l1=nprobe_l1, nprobe=nprobe):
-                data.append((r[query_id_col], vec, c))
-        return _pruned_blas_topk(
-            self.assignments,
-            data,
-            k,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            round_digits=round_digits,
-            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
-        )
-
-    def assign_new(self, new_vectors: DataFrame) -> "HierarchicalIVF":
-        """Incrementally index NEW vectors against the EXISTING two-level
-        centroid structure (no refit) — ingest parity with
-        ``IVFIndex.assign_new`` (round 12), on the index class sized for
-        serving-scale cell counts. One Arrow pass over the new rows runs
-        the SAME two-stage argmin as build's assignment
-        (``_hier_assign_fn`` — shared closure, so ingest placement
-        equals build placement by construction), then unions into the
-        assignments. Returns a NEW HierarchicalIVF; the receiver is
-        untouched (the flat class's purity contract). Drift policy:
-        ``rebuild_due`` over ``assignments``-derived occupancy, same as
-        flat — the r12 drift study's trigger applies per composite
-        cell. The reference cannot ingest at all (build-once graph,
-        src/lib.rs:336-341)."""
-        spark = new_vectors.sparkSession
-        bc = spark.sparkContext.broadcast(
+    def _assign(self, new_vectors: DataFrame) -> DataFrame:
+        """The build's own two-stage argmin (``_hier_assign_fn``), so
+        ingest placement equals build placement by construction."""
+        bc = new_vectors.sparkSession.sparkContext.broadcast(
             (
                 self.l1_centroids,
                 self.l2_centroids,
@@ -2140,180 +1951,42 @@ class HierarchicalIVF:
                 self._overflow_by_parent(),
             )
         )
-        assign = _hier_assign_fn(bc, self.id_col, self.vec_col)
+        # Honor the caller's id column name AND type (hardcoding
+        # `vec_id BIGINT` broke custom — e.g. string — ids under the
+        # engine facade's hierarchical build).
         id_type = new_vectors.schema[self.id_col].dataType.simpleString()
         geom_field = (
             f", {GEOM_COL} ARRAY<FLOAT>" if self.proj is not None else ""
         )
-        assigned = new_vectors.select(self.id_col, self.vec_col).mapInPandas(
-            assign,
+        return new_vectors.select(self.id_col, self.vec_col).mapInPandas(
+            _hier_assign_fn(bc, self.id_col, self.vec_col),
             schema=(
                 f"{self.id_col} {id_type}, {self.vec_col} ARRAY<FLOAT>, "
                 f"cell_id INT{geom_field}"
             ),
         )
-        return HierarchicalIVF(
-            self.l1_centroids,
-            self.l2_centroids,
-            self.assignments.unionByName(assigned),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            k2_stride=self.k2,
-            proj=self.proj,
-            overflow=self.overflow,
-        )
 
-    def search_filtered(
-        self,
-        query,
-        k: int,
-        *,
-        metadata: DataFrame,
-        predicate,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        meta_id_col: str | None = None,
-    ) -> DataFrame:
-        """Filtered ANN with PRE-filter semantics on the two-level
-        index (round 13 — closes the facade's flat-only restriction).
-        Contract identical to :meth:`IVFIndex.search_filtered` (whose
-        docstring carries the pre-vs-post-filter argument and the scale
-        shape): predicate filters metadata first, a semi-join restricts
-        the probed candidates, exact re-rank returns the true top-k
-        over the QUALIFYING subset."""
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        cells = self._probe_cells(
-            np.asarray(query, dtype=np.float64),
-            nprobe_l1=nprobe_l1,
-            nprobe=nprobe,
-        )
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
-        keep = metadata.filter(predicate).select(
-            F.col(meta_id_col or self.id_col).alias(self.id_col)
-        )
-        cand = cand.join(keep, self.id_col, "left_semi")
-        return knn_exact(
-            cand, list(map(float, query)), k,
-            id_col=self.id_col, vec_col=self.vec_col,
-        )
-
-    def merge(self, other) -> "HierarchicalIVF":
-        """Merge another index's vectors into THIS index's two-level
-        cell structure — the sharded-build pattern on the class sized
-        for serving-scale cell counts (round 13; semantics identical to
-        :meth:`IVFIndex.merge`, whose docstring carries the full
-        contract: receiver's centroids win, one ``assign_new`` pass
-        over the other side only, ids assumed disjoint, order-invariant
-        under a fixed receiver, chain ``.rebalance()`` for differing
-        shard distributions, NEITHER input modified). ``other`` may be
-        either index class — only its (id, vector) rows are read; its
-        own cell structure is irrelevant to this geometry."""
-        return self.assign_new(
-            other.assignments.select(
-                F.col(other.id_col).alias(self.id_col),
-                F.col(other.vec_col).alias(self.vec_col),
-            )
-        )
-
-    def cell_stats(self) -> DataFrame:
-        """Per-cell occupancy — same contract as ``IVFIndex.cell_stats``."""
-        return (
-            self.assignments.groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("n_vectors"))
-            .orderBy("cell_id")
-        )
-
-    def occupancy_stats(self) -> dict:
-        """Occupancy health over the COMPOSITE cells — same contract
-        and remedies as ``IVFIndex.occupancy_stats`` (the r12 drift
-        study's ``rebuild_due`` trigger consumes this on either
-        class)."""
-        return _occupancy_stats(self.assignments)
-
-    def split_hot_cells(
-        self,
-        *,
-        factor: float = 2.0,
-        seed: int = DEFAULT_SEED,
-        max_cell_fit_rows: int = 100_000,
+    def _split(
+        self, subs: dict, new_id: dict, assignments: DataFrame
     ) -> "HierarchicalIVF":
-        """Hot-cell repair for the two-level index (round 13, closing
-        the measured hier-drift gap): ``assign_new`` funnels
-        out-of-distribution vectors into cells whose BUILD-time
-        centroids sit far from the new modes, so probe ranking
-        misorders them and recall decays (measured at 500k + 8 OOD
-        batches: hier 0.74-0.81 vs flat 0.98-0.99 at equal nprobe,
-        SCALE.md r12 — flat could repair via split_hot_cells; hier
-        could not). Same rule as :meth:`IVFIndex.split_hot_cells` —
-        every cell with occupancy > ``factor`` x mean splits in two by
-        a seeded local 2-means (shared ``_fit_hot_subcentroids`` /
-        ``_reassign_hot_rows`` helpers, so both classes split under
-        the identical discipline).
-
-        Id bookkeeping: a split's sub0 keeps the cell id (its centroid
-        updates in place); sub1 becomes an OVERFLOW cell — a fresh id
-        >= k1 x stride carrying its parent super-cell, so the
-        composite encoding, the stride decode, and every saved cold
-        partition stay untouched. Overflow cells participate in probe
-        ranking, declarative batch ranking, and ingest assignment as
-        extra sub-cells of their parent (see ``_overflow_by_parent``).
-        Returns a NEW index; the receiver is untouched."""
-        occ = {
-            r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
-        }
-        if not occ:
-            return self
-        mean_occ = sum(occ.values()) / len(occ)
-        hot = sorted(
-            c for c, n in occ.items() if n > factor * mean_occ and n >= 2
-        )
-        if not hot:
-            return self
-
-        geom_col = GEOM_COL if self.proj is not None else self.vec_col
-        hot_rows = self.assignments.filter(F.col("cell_id").isin(hot))
-        subs = _fit_hot_subcentroids(
-            hot_rows,
-            geom_col=geom_col,
-            seed=seed,
-            max_cell_fit_rows=max_cell_fit_rows,
-        )
-
-        base = self.k2 * len(self.l1_centroids)
-        next_id = max([base - 1] + list(self.overflow.keys())) + 1
+        """A split cell's sub-centroid 0 updates it in place (its l2
+        block row, or its overflow entry); sub-centroid 1 becomes
+        overflow cell ``new_id[c]`` of the same parent, so the composite
+        encoding, the stride decode and every saved cold partition stay
+        untouched."""
         new_l2 = {k: v.copy() for k, v in self.l2_centroids.items()}
         new_overflow = dict(self.overflow)
-        new_id: dict[int, int] = {}
-        for c in hot:
-            if c < base:
-                parent, sub = c // self.k2, c % self.k2
-                new_l2[parent][sub] = subs[(c, 0)]
-            else:
-                parent = self.overflow[c][0]
+        for c, nid in new_id.items():
+            parent = int(self._parent[c])
+            if c in self.overflow:
                 new_overflow[c] = (parent, subs[(c, 0)])
-            new_overflow[next_id] = (parent, subs[(c, 1)])
-            new_id[c] = next_id
-            next_id += 1
-
-        carry = [self.id_col, self.vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
-        reassigned = _reassign_hot_rows(
-            hot_rows, subs, new_id, geom_col=geom_col, carry=carry
-        )
-        cold = self.assignments.filter(~F.col("cell_id").isin(hot)).select(
-            *carry, "cell_id"
-        )
+            else:
+                new_l2[parent][c % self.k2] = subs[(c, 0)]
+            new_overflow[nid] = (parent, subs[(c, 1)])
         return HierarchicalIVF(
             self.l1_centroids,
             new_l2,
-            cold.unionByName(reassigned),
+            assignments,
             id_col=self.id_col,
             vec_col=self.vec_col,
             k2_stride=self.k2,
@@ -2321,106 +1994,51 @@ class HierarchicalIVF:
             overflow=new_overflow,
         )
 
-    def rebalance(
-        self,
-        *,
-        factor: float = 2.0,
-        seed: int = DEFAULT_SEED,
-        max_rounds: int = 4,
-    ) -> "HierarchicalIVF":
-        """Iterate ``split_hot_cells`` to the occupancy bound — same
-        loop and lineage-cut discipline as ``IVFIndex.rebalance``."""
-        idx = self
-        for r in range(max_rounds):
-            nxt = idx.split_hot_cells(factor=factor, seed=seed + r)
-            if nxt is idx:
-                return idx
-            nxt.assignments = nxt.assignments.localCheckpoint(eager=False)
-            idx = nxt
-        return idx
-
-    # -- persistence (same layout discipline as IVFIndex.save) ------------
-
-    def save(self, spark: SparkSession, path: str) -> None:
-        """Persist as plain parquet: assignments partitioned by the
-        composite cell (partition-prunable probes after reload), level-1
-        centroids, and the (l1, l2, centroid) table. The projection (if
-        any) is written before meta — the final meta _SUCCESS marker
-        implies the whole index committed — and load keys geometry on
-        GEOM_COL's presence in the assignments, the same explicit
-        marker the flat index uses. The cell_id repartition before the
-        partitioned write is the flat save's one-file-per-cell
-        discipline (see IVFIndex.save — the 141k-file layout it
-        prevents was measured on THIS class at 5M x 384-d)."""
-        self.assignments.repartition("cell_id").write.mode(
-            "overwrite"
-        ).partitionBy("cell_id").parquet(f"{path}/assignments")
-        if self.proj is not None:
-            prows = [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.proj)
-            ]
-            spark.createDataFrame(
-                prows, "row_idx INT, coeffs ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/proj")
-        l1 = [(int(i), [float(x) for x in row]) for i, row in enumerate(self.l1_centroids)]
-        spark.createDataFrame(l1, "l1 INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/l1_centroids")
-        l2 = [
-            (int(l1_), int(l2_), [float(x) for x in row])
-            for l1_, block in sorted(self.l2_centroids.items())
-            for l2_, row in enumerate(block)
-        ]
-        spark.createDataFrame(l2, "l1 INT, l2 INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/l2_centroids")
+    def _save_quantizer(self, spark: SparkSession, path: str) -> None:
+        _write_table(
+            spark, _matrix_rows(self.l1_centroids),
+            "l1 INT, centroid ARRAY<DOUBLE>", f"{path}/l1_centroids",
+        )
+        _write_table(
+            spark,
+            [
+                (int(l1_), int(l2_), [float(x) for x in row])
+                for l1_, block in sorted(self.l2_centroids.items())
+                for l2_, row in enumerate(block)
+            ],
+            "l1 INT, l2 INT, centroid ARRAY<DOUBLE>",
+            f"{path}/l2_centroids",
+        )
         # ALWAYS written (empty is fine): load() probes overflow/ by
         # reading, so an in-place re-save of an overflow-free index
         # (e.g. a fresh rebuild) over a path that previously held a
         # split index must overwrite the stale table — otherwise
         # phantom centroids re-enter probe ranking and assign_new, and
         # num_cells inflates so target_frac budgets mis-resolve.
-        ov = [
-            (int(c), int(p), [float(x) for x in cent])
-            for c, (p, cent) in sorted(self.overflow.items())
-        ]
-        spark.createDataFrame(
-            ov, "cell_id INT, parent_l1 INT, centroid ARRAY<DOUBLE>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/overflow")
+        _write_table(
+            spark,
+            [
+                (int(c), int(p), [float(x) for x in cent])
+                for c, (p, cent) in sorted(self.overflow.items())
+            ],
+            "cell_id INT, parent_l1 INT, centroid ARRAY<DOUBLE>",
+            f"{path}/overflow",
+        )
         # The cell-id stride is build-time state, not derivable from the
         # centroid blocks (an under-filled build has max block < stride).
-        # Written LAST (after overflow): its _SUCCESS marker implies the
-        # whole index committed.
-        spark.createDataFrame([(int(self.k2),)], "k2_stride INT").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/meta")
+        # Written LAST: its _SUCCESS marker implies the whole index
+        # committed.
+        _write_table(spark, [(int(self.k2),)], "k2_stride INT", f"{path}/meta")
 
     @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        path: str,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "HierarchicalIVF":
-        l1_rows = spark.read.parquet(f"{path}/l1_centroids").orderBy("l1").collect()
-        l1 = np.vstack([np.asarray(r["centroid"]) for r in l1_rows])
+    def _load_quantizer(cls, spark: SparkSession, path: str) -> dict:
+        l1 = _read_matrix(spark, f"{path}/l1_centroids", "l1", "centroid")
         l2: dict[int, list] = {}
         for r in sorted(
             spark.read.parquet(f"{path}/l2_centroids").collect(),
             key=lambda r: (r["l1"], r["l2"]),
         ):
             l2.setdefault(int(r["l1"]), []).append(r["centroid"])
-        l2_np = {k: np.asarray(v) for k, v in l2.items()}
-        assignments = spark.read.parquet(f"{path}/assignments")
-        proj = None
-        if GEOM_COL in assignments.columns:
-            prows = (
-                spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
-            )
-            proj = np.vstack([np.asarray(r["coeffs"]) for r in prows])
         try:
             stride = int(
                 spark.read.parquet(f"{path}/meta").first()["k2_stride"]
@@ -2430,25 +2048,21 @@ class HierarchicalIVF:
             # inference (correct whenever some super-cell filled up)
             stride = None
         try:
-            # absent on any index never split (and on every pre-r13
-            # save) — a local-FS existence check would break non-local
-            # paths, so probe by reading like the stride above.
+            # absent on every pre-r13 save — a local-FS existence check
+            # would break non-local paths, so probe by reading like the
+            # stride above.
             overflow = {
                 int(r["cell_id"]): (int(r["parent_l1"]), r["centroid"])
                 for r in spark.read.parquet(f"{path}/overflow").collect()
             }
         except Exception:
             overflow = {}
-        return cls(
-            l1,
-            l2_np,
-            assignments,
-            id_col=id_col,
-            vec_col=vec_col,
-            k2_stride=stride,
-            proj=proj,
-            overflow=overflow,
-        )
+        return {
+            "l1_centroids": l1,
+            "l2_centroids": {k: np.asarray(v) for k, v in l2.items()},
+            "k2_stride": stride,
+            "overflow": overflow,
+        }
 
 
 class IVFPQIndex:
@@ -2581,19 +2195,16 @@ class IVFPQIndex:
         asg = ivf.assignments
         id_col, vec_col = ivf.id_col, ivf.vec_col
         geom_col = ivf.geom_col
-        # Either index class (round 14): the flat class exposes its
-        # centroid matrix directly; the hierarchical one synthesizes a
-        # dense composite-cell matrix (phantom slots pushed far away).
-        centroids = getattr(ivf, "centroids", None)
-        if centroids is None:
-            centroids = ivf.pq_cell_centroids()
+        # Either index class: a HierarchicalIVF's centroids are its dense
+        # composite-cell matrix (phantom slots pushed far away).
+        centroids = ivf.centroids
         full_codes = code_space == "full" and ivf.proj is not None
         if full_codes:
             # Per-cell FULL-space means: one applyInPandas over the
             # cells, num_cells x dim doubles to the driver
             # (index-sized, same class as the centroid matrix).
             def cell_mean(pdf: pd.DataFrame) -> pd.DataFrame:
-                xm = np.vstack(pdf[vec_col].apply(np.asarray, dtype=np.float64))
+                xm = _stack(pdf[vec_col])
                 return pd.DataFrame(
                     {
                         "cell_id": [int(pdf["cell_id"].iloc[0])],
@@ -2702,7 +2313,7 @@ class IVFPQIndex:
             # the 5M encode's wall (r14).
             bnorms = [(books[j] ** 2).sum(axis=1) for j in range(m_)]
             for pdf in it:
-                xb = np.vstack(pdf[code_col].apply(np.asarray, dtype=np.float64))
+                xb = _stack(pdf[code_col])
                 gathered = cent[pdf["cell_id"].to_numpy()]
                 # A NaN row here is the sentinel for an unpopulated
                 # cell (see the NaN-fill above): encoding against it
@@ -2882,13 +2493,8 @@ class IVFPQIndex:
         this distributed path too)."""
         if refine > 0 and store is None:
             raise ValueError("refine > 0 requires the vector store (store=)")
-        spark = queries.sparkSession
-        cent_df = spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.centroids)
-            ],
-            "cell_id INT, centroid ARRAY<DOUBLE>",
+        cent_df = queries.sparkSession.createDataFrame(
+            _matrix_rows(self.centroids), "cell_id INT, centroid ARRAY<DOUBLE>"
         )
         q_geom_col = query_vec_col
         if self.proj is not None:
@@ -2909,12 +2515,10 @@ class IVFPQIndex:
             "cell_id",
             l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_cd"),
         )
-        wp = Window.partitionBy(query_id_col).orderBy("_cd", "cell_id")
-        probed = (
-            qc.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= max(1, nprobe))
-            .select(query_id_col, tab_col, "cell_id")
-        )
+        probed = top_k_per_query(
+            qc, max(1, nprobe), order=("_cd", "cell_id"), by=query_id_col,
+            sort=False,
+        ).select(query_id_col, tab_col, "cell_id")
         keep = max(refine, 1) * k
         scored = _cogroup_adc_topk(
             probed,
@@ -2928,21 +2532,13 @@ class IVFPQIndex:
             query_geom_col=tab_col,
             query_id_type=queries.schema[query_id_col].dataType.simpleString(),
         )
-        w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-        survivors = (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= keep)
-            .drop("_r")
+        survivors = top_k_per_query(
+            scored, keep, order=("adc", "vec_id"), sort=False
         )
         if refine <= 0:
             return (
-                survivors.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= k)
-                .select(
-                    "query_id",
-                    "vec_id",
-                    F.round("adc", 4).alias("dist"),
-                )
+                top_k_per_query(survivors, k, order=("adc", "vec_id"), sort=False)
+                .select("query_id", "vec_id", F.round("adc", 4).alias("dist"))
                 .orderBy("query_id", "dist", "vec_id")
             )
         true_vec = store.select(
@@ -2961,13 +2557,7 @@ class IVFPQIndex:
         )
         if round_digits is not None:
             exact = exact.withColumn("dist", F.round("dist", round_digits))
-        wk = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-        return (
-            exact.withColumn("_r", F.row_number().over(wk))
-            .filter(F.col("_r") <= k)
-            .select("query_id", "vec_id", "dist")
-            .orderBy("query_id", "dist", "vec_id")
-        )
+        return top_k_per_query(exact.select("query_id", "vec_id", "dist"), k)
 
     def save(self, spark: SparkSession, path: str) -> None:
         """Codes partitioned by cell_id (partition-prunable ADC scans),
@@ -2985,41 +2575,36 @@ class IVFPQIndex:
             "overwrite"
         ).partitionBy("cell_id").parquet(f"{path}/codes")
         if self.proj is not None:
-            prows = [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.proj)
-            ]
-            spark.createDataFrame(
-                prows, "row_idx INT, coeffs ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/proj")
-        cent = [(int(i), [float(x) for x in r]) for i, r in enumerate(self.centroids)]
-        spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
+            _write_table(
+                spark, _matrix_rows(self.proj),
+                "row_idx INT, coeffs ARRAY<DOUBLE>", f"{path}/proj",
+            )
+        _write_table(
+            spark, _matrix_rows(self.centroids),
+            "cell_id INT, centroid ARRAY<DOUBLE>", f"{path}/centroids",
+        )
         m, ksub, _ = self.codebooks.shape
         book = [
             (j, c, [float(x) for x in self.codebooks[j, c]])
             for j in range(m)
             for c in range(ksub)
         ]
-        spark.createDataFrame(book, "m INT, code INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/codebooks")
+        _write_table(
+            spark, book, "m INT, code INT, centroid ARRAY<DOUBLE>",
+            f"{path}/codebooks",
+        )
         if self.code_centroids is not None:
-            cc = [
-                (int(i), [float(x) for x in r])
-                for i, r in enumerate(self.code_centroids)
-            ]
-            spark.createDataFrame(
-                cc, "cell_id INT, centroid ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/code_centroids"
+            _write_table(
+                spark, _matrix_rows(self.code_centroids),
+                "cell_id INT, centroid ARRAY<DOUBLE>", f"{path}/code_centroids",
             )
-        spark.createDataFrame(
+        _write_table(
+            spark,
             [(bool(self.proj is not None),
               bool(self.code_centroids is not None))],
             "has_proj BOOLEAN, full_space BOOLEAN",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+            f"{path}/meta",
+        )
 
     @classmethod
     def load(
@@ -3030,8 +2615,7 @@ class IVFPQIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IVFPQIndex":
-        cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-        centroids = np.vstack([np.asarray(r["centroid"]) for r in cent_rows])
+        centroids = _read_matrix(spark, f"{path}/centroids", "cell_id", "centroid")
         book_rows = sorted(
             spark.read.parquet(f"{path}/codebooks").collect(),
             key=lambda r: (r["m"], r["code"]),
@@ -3053,10 +2637,7 @@ class IVFPQIndex:
         from pyspark.errors import AnalysisException
 
         def _read_proj() -> np.ndarray:
-            prows = (
-                spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
-            )
-            return np.vstack([np.asarray(r["coeffs"]) for r in prows])
+            return _read_matrix(spark, f"{path}/proj", "row_idx", "coeffs")
 
         full_space = False
         try:
@@ -3075,12 +2656,9 @@ class IVFPQIndex:
             proj = _read_proj() if has_proj else None
         code_cent = None
         if full_space:
-            cc_rows = (
-                spark.read.parquet(f"{path}/code_centroids")
-                .orderBy("cell_id")
-                .collect()
+            code_cent = _read_matrix(
+                spark, f"{path}/code_centroids", "cell_id", "centroid"
             )
-            code_cent = np.vstack([np.asarray(r["centroid"]) for r in cc_rows])
         return cls(
             centroids, codebooks, codes,
             id_col=id_col, vec_col=vec_col, proj=proj,
@@ -3153,7 +2731,7 @@ class MultiProbeLSH:
             for pdf in it:
                 if not len(pdf):
                     continue
-                x = np.vstack(pdf[vec_col].apply(np.asarray, dtype=np.float64))
+                x = _stack(pdf[vec_col])
                 h = np.floor((x @ p.T + b) / w).astype(np.int64)  # (n, L)
                 n, L = h.shape
                 yield pd.DataFrame(
@@ -3214,12 +2792,11 @@ class MultiProbeLSH:
             (int(t), [float(x) for x in self.projections[t]], float(self.offsets[t]))
             for t in range(self.projections.shape[0])
         ]
-        spark.createDataFrame(
-            meta, "table INT, projection ARRAY<DOUBLE>, offset DOUBLE"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        spark.createDataFrame(
-            [(self.width,)], "width DOUBLE"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/width")
+        _write_table(
+            spark, meta, "table INT, projection ARRAY<DOUBLE>, offset DOUBLE",
+            f"{path}/meta",
+        )
+        _write_table(spark, [(self.width,)], "width DOUBLE", f"{path}/width")
 
     @classmethod
     def load(

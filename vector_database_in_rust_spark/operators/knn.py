@@ -100,6 +100,28 @@ def _dist(metric: str, a: Column, b: Column) -> Column:
     return -d if metric == "cosine" else d
 
 
+def top_k_per_query(
+    scored: DataFrame,
+    k: int,
+    *,
+    order: tuple[str, ...] = ("dist", "vec_id"),
+    by: str = "query_id",
+    sort: bool = True,
+) -> DataFrame:
+    """Each ``by`` group's first ``k`` rows under ``order`` — the
+    ``row_number() <= k`` ranking-window tail every batch top-k shares
+    (it plans as a map-side WindowGroupLimit, so the exchange carries
+    at most ``k`` rows per group per partition). ``sort`` orders the
+    result by ``(by, *order)``, the batch paths' output contract."""
+    w = Window.partitionBy(by).orderBy(*order)
+    out = (
+        scored.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= k)
+        .drop("_r")
+    )
+    return out.orderBy(by, *order) if sort else out
+
+
 def knn_exact(
     corpus: DataFrame,
     query: Sequence[float] | Column,
@@ -172,13 +194,7 @@ def knn_batch(
         F.col(id_col).alias("vec_id"),
         dist.alias("dist"),
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return top_k_per_query(scored, k)
 
 
 def knn_join(
@@ -315,13 +331,7 @@ def _knn_batch_pandas(
     partial = corpus.select(id_col, vec_col).mapInPandas(
         block, schema="query_id BIGINT, vec_id BIGINT, dist DOUBLE"
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        partial.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return top_k_per_query(partial, k)
 
 
 def pack_codes(
@@ -528,10 +538,4 @@ def hard_negatives(
         F.col(label_col).alias("neg_label"),
         dist.alias("dist"),
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return top_k_per_query(scored, k)

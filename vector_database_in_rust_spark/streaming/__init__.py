@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from vector_database_in_rust_spark.operators.validate import dim_ok
+
 
 def await_or_raise(q: StreamingQuery, timeout_sec: float) -> None:
     """Block until ``q`` terminates; on timeout stop the query and raise
@@ -139,3 +141,37 @@ def mark_batch_appended(
     fs, p = _marker_fs(spark, store_path, batch_id, content_key)
     fs.mkdirs(p.getParent())
     fs.create(p, True).close()
+
+
+def append_validated_batch(
+    batch: DataFrame,
+    batch_id: int,
+    store_path: str,
+    *,
+    dimensions: int,
+    quarantine_path: str | None = None,
+) -> tuple[DataFrame, int, int]:
+    """The validated, idempotent micro-batch append shared by both
+    streaming ingest sinks (``ingest.ingest_vectors`` and
+    ``maintenance.stream_ingest_into_index``).
+
+    Splits ``batch`` on the dimension contract (the reference's
+    per-insert check, src/lib.rs:62-72) and counts both sides plus the
+    ledger content key in ONE aggregation job
+    (:func:`batch_content_stats`). Unless the ledger shows this exact
+    batch already committed, the valid rows append to ``store_path``,
+    rejects append to ``quarantine_path`` (when given), and the marker
+    is written LAST. A cross-run replay writes nothing — the store and
+    quarantine appends both committed before the marker, so neither
+    duplicates. Returns ``(valid, n_ok, n_bad)`` either way, so a
+    caller can still assign or report the batch."""
+    spark = batch.sparkSession
+    ok = dim_ok("embedding", dimensions)
+    valid = batch.filter(ok)
+    n_total, n_ok, key = batch_content_stats(batch, ok)
+    if not batch_already_appended(spark, store_path, batch_id, key):
+        valid.write.mode("append").parquet(store_path)
+        if quarantine_path is not None and n_total > n_ok:
+            batch.filter(~ok).write.mode("append").parquet(quarantine_path)
+        mark_batch_appended(spark, store_path, batch_id, key)
+    return valid, n_ok, n_total - n_ok

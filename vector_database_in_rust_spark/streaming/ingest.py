@@ -26,12 +26,12 @@ rebuilds when drift accumulates (same regime as any IVF system).
 
 from __future__ import annotations
 
-from vector_database_in_rust_spark.streaming import await_or_raise
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from vector_database_in_rust_spark.operators.validate import dim_ok
+from vector_database_in_rust_spark.streaming import (
+    append_validated_batch,
+    await_or_raise,
+)
 
 VECTORS_DDL = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
@@ -63,30 +63,13 @@ def ingest_vectors(
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from vector_database_in_rust_spark.streaming import (
-            batch_already_appended,
-            batch_content_stats,
-            mark_batch_appended,
+        append_validated_batch(
+            batch,
+            batch_id,
+            store_path,
+            dimensions=dimensions,
+            quarantine_path=quarantine_path,
         )
-
-        spark = batch.sparkSession
-        ok = dim_ok("embedding", dimensions)
-        valid = batch.filter(ok)
-        # One aggregation job replaces the old quarantine limit(1)
-        # probe AND keys the ledger marker by batch CONTENT (round 15,
-        # advisor: id-only markers silently skip appends when a reset
-        # checkpoint restarts batch ids over different rows).
-        n_total, n_ok, key = batch_content_stats(batch, ok)
-        if batch_already_appended(spark, store_path, batch_id, key):
-            # Cross-run replay of this exact batch: the store append
-            # AND its quarantine append (written before the marker)
-            # already committed — skip both, so replays cannot
-            # duplicate quarantine records either (round 15, advisor).
-            return
-        valid.write.mode("append").parquet(store_path)
-        if quarantine_path is not None and n_total > n_ok:
-            batch.filter(~ok).write.mode("append").parquet(quarantine_path)
-        mark_batch_appended(spark, store_path, batch_id, key)
 
     writer = stream.writeStream.foreachBatch(write_batch).trigger(availableNow=True)
     if checkpoint_path is not None:

@@ -57,15 +57,11 @@ import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from vector_database_in_rust_spark.operators.ann import rebuild_due
-from vector_database_in_rust_spark.operators.validate import dim_ok
 from vector_database_in_rust_spark.streaming import (
+    append_validated_batch,
     await_or_raise,
-    batch_already_appended,
-    batch_content_stats,
-    mark_batch_appended,
 )
 
 
@@ -115,19 +111,19 @@ def stream_ingest_into_index(
             # assigned into state["index"] — re-running would duplicate
             # assignments.
             return
-        spark = batch.sparkSession
-        ok = dim_ok("embedding", dimensions)
-        valid = batch.filter(ok)
         # Counted UNCONDITIONALLY: the module contract is "never
         # silently drop", and the history row must report rejects even
-        # when no quarantine sink exists. ONE aggregation job covers
-        # both counts AND the ledger content key (per-micro-batch
-        # overhead matters: 32 small batches pay it 32 times) — the
-        # content key makes the marker match the batch's ROWS, not a
-        # lineage-local id a reset checkpoint would reuse (round 15,
-        # advisor's silent-data-loss finding; see batch_content_stats).
-        n_total, n_ok, key = batch_content_stats(batch, ok)
-        n_bad = n_total - n_ok
+        # when no quarantine sink exists. A cross-run replay (a prior
+        # run crashed after the store write, before the checkpoint
+        # commit) skips the appends but still needs assignment into
+        # THIS run's index, which started from the caller's.
+        valid, n_ok, n_bad = append_validated_batch(
+            batch,
+            batch_id,
+            store_path,
+            dimensions=dimensions,
+            quarantine_path=quarantine_path,
+        )
         if n_bad and quarantine_path is None:
             warnings.warn(
                 f"stream_ingest_into_index batch {batch_id}: {n_bad} "
@@ -135,22 +131,6 @@ def stream_ingest_into_index(
                 "given); the history row records them",
                 stacklevel=2,
             )
-        if batch_already_appended(spark, store_path, batch_id, key):
-            # cross-run replay: a prior run crashed after the store
-            # write but before the checkpoint commit. Skip the
-            # duplicate store append AND the quarantine append (both
-            # committed before the marker; round 15, advisor: the
-            # unguarded quarantine write duplicated records on every
-            # replay). The batch still needs assignment into THIS
-            # run's index (which started from the caller's).
-            pass
-        else:
-            valid.write.mode("append").parquet(store_path)
-            if n_bad and quarantine_path is not None:
-                batch.filter(~ok).write.mode("append").parquet(
-                    quarantine_path
-                )
-            mark_batch_appended(spark, store_path, batch_id, key)
         grown = state["index"].assign_new(
             valid.select(state["index"].id_col, state["index"].vec_col)
         )
